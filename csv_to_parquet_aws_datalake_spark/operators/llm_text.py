@@ -209,10 +209,14 @@ def i22_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair.  Implemented as Pregel-style iterative min-label propagation:
     each round is one shuffle (edges ⋈ labels, groupBy min), looped until a
     fixed point; iteration count is the graph diameter (tiny for dup
-    clusters).  localCheckpoint truncates the growing lineage.  At 100 TB
-    the identical loop runs with the large-star/small-star optimization;
-    the oracle is a recursive-CTE transitive closure (fine at oracle scale,
-    quadratic in cluster size so never the production path).
+    clusters).  localCheckpoint truncates the growing lineage.  The oracle
+    is a recursive-CTE transitive closure (fine at oracle scale, quadratic
+    in cluster size so never the production path).
+
+    i22 (and i24, which runs it) keeps this loop rather than calling i27's
+    cc_components: near-dup clusters have a tiny diameter, and on the
+    benchmark lake (sf 0.002, local[4], 7 reps) this loop took 19 jobs and
+    2.0 CPU s per call against the star kernel's 29 jobs and 3.1 CPU s.
 
     Iterations are bounded at I22_MAX_ITERS: min-label propagation
     converges in graph-diameter rounds, so hitting the cap means a bug or
@@ -1068,21 +1072,16 @@ def cc_components(edges: DataFrame) -> DataFrame:
     (i.e. its component label candidate; label = least(doc_id, mn)).  Only
     nodes with at least one edge appear — callers handle isolated nodes.
     Factored out so tools/scale_stress.py can drive it on amplified edge
-    sets; the loop bound and per-round plan are unchanged from the
-    registered query."""
-    # symmetric directed edge set (u, v)
-    e = (edges.select(F.col("a").alias("u"), F.col("b").alias("v"))
-         .union(edges.select(F.col("b").alias("u"), F.col("a").alias("v")))
-         .distinct().localCheckpoint())
-
+    sets."""
     def large_star(sym: DataFrame) -> DataFrame:
-        # connect every neighbor v > u to m(u) = min(N(u) + {u})
+        # connect every neighbor v > u to m(u) = min(N(u) + {u}); the
+        # duplicates this can emit are removed by small_star's distinct()
         mins = sym.groupBy("u").agg(F.min("v").alias("mn"))
         m = F.least(F.col("u"), F.col("mn"))
         out = (sym.join(mins, "u")
                .filter(F.col("v") > F.col("u"))
                .select(F.col("v").alias("a"), m.alias("b")))
-        return out.filter(F.col("a") != F.col("b")).distinct()
+        return out.filter(F.col("a") != F.col("b"))
 
     def small_star(und: DataFrame) -> DataFrame:
         # orient each edge large -> small, then connect all smaller
@@ -1096,30 +1095,27 @@ def cc_components(edges: DataFrame) -> DataFrame:
         return (nbr.union(ctr)
                 .filter(F.col("a") != F.col("b")).distinct())
 
+    # `prev` is the canonical edge set: a > b strictly, distinct.  Self
+    # loops are dropped up front; large_star never connects a node to
+    # itself, so they change no label.  Its size comes from an observed
+    # metric of the checkpoint job, not a separate count() action.
+    seed = Observation()
+    prev = (edges.select(F.greatest("a", "b").alias("a"),
+                         F.least("a", "b").alias("b"))
+            .filter(F.col("a") != F.col("b")).distinct()
+            .observe(seed, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint())
+    prev_n = seed.get["n"]
     # big-star/small-star converges in O(log n) rounds; bound the loop at
-    # ceil(log2(n)) + slack and fail loudly — a regression in the star
-    # transforms must not hang the run.  count() on the checkpointed
-    # edge set is cheap.
-    max_rounds = max(8, math.ceil(math.log2(e.count() + 2)) + 4)
-    # Fixed-point test folded INTO the per-round checkpoint job (r22,
-    # guide §1.5 driver round-trips: one action per round, not two).
-    # small_star's output is already canonical — a > b strictly (nbr
-    # rows pair v with mn = min over its group, filtered a != b; ctr
-    # rows pair u with mn < u) and distinct — so round k's edge set can
-    # be compared to round k-1's by a (a, b) equi-join: with
-    # matched = |stars ∩ prev| observed during the checkpoint,
-    # stars == prev as sets  ⟺  matched == |stars| ∧ matched == |prev|
-    # (both are distinct sets).  |prev| is last round's observed count,
-    # so the former separate symmetric-difference action (two distincts
-    # + two exceptAlls per round) disappears; the join's build side is
-    # the pinned previous round (tiny, checkpointed).  `prev` is
-    # canonicalized once up front from the symmetric seed — identical
-    # set semantics, since each round's input is the symmetric closure
-    # either way.
-    prev = (e.select(F.greatest("u", "v").alias("a"),
-                     F.least("u", "v").alias("b"))
-            .distinct().localCheckpoint())
-    prev_n = prev.count()
+    # ceil(log2(n)) + slack, n the symmetric edge count, and fail loudly —
+    # a regression in the star transforms must not hang the run.
+    max_rounds = max(8, math.ceil(math.log2(2 * prev_n + 2)) + 4)
+    # The fixed-point test is folded into each round's checkpoint job.
+    # small_star's output is canonical like `prev` (nbr rows pair v with
+    # mn = min over its group, filtered a != b; ctr rows pair u with
+    # mn < u; then distinct), so with matched = |stars ∩ prev| observed
+    # by an (a, b) equi-join during the checkpoint,
+    # stars == prev as sets  ⟺  matched == |stars| ∧ matched == |prev|.
     for _round in range(max_rounds + 1):
         if _round == max_rounds:
             raise AssertionError(
@@ -1127,18 +1123,17 @@ def cc_components(edges: DataFrame) -> DataFrame:
                 f"rounds (expected O(log n)); the star transforms or the "
                 f"edge set are pathological."
             )
+        # a > b and distinct, so the symmetric union is distinct too
         stars = small_star(large_star(
             prev.select(F.col("a").alias("u"), F.col("b").alias("v"))
-                .union(prev.select(F.col("b").alias("u"), F.col("a").alias("v")))
-                .distinct()))
+                .union(prev.select(F.col("b").alias("u"), F.col("a").alias("v")))))
         obs = Observation()
-        flagged = (
+        prev = (
             stars.join(prev.withColumn("_seen", F.lit(1)), ["a", "b"], "left")
             .observe(obs, F.count(F.lit(1)).alias("n"),
-                     F.sum("_seen").alias("matched")))
-        nxt = flagged.localCheckpoint()
+                     F.sum("_seen").alias("matched"))
+            .select("a", "b").localCheckpoint())
         n, matched = obs.get["n"], obs.get["matched"] or 0
-        prev = nxt.select("a", "b")
         if n == matched == prev_n:
             break
         prev_n = n

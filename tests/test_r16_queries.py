@@ -1,7 +1,5 @@
-"""Round-16 additions: j11 TTL stream dedup (registered this round —
-graduated from the r16 staging module per the SURVEY §7.12 ledger's
-named fate): the TTL-lifecycle mechanism pins, migrated from
-tests/test_staged_r16.py.  Oracle parity runs through the registry-wide
+"""j11 TTL stream dedup: the TTL-lifecycle mechanism pins, plus i67's
+independent reference.  Oracle parity runs through the registry-wide
 differential suite (tests/test_differential.py) like every registered
 query."""
 
@@ -64,8 +62,7 @@ def test_i67_matches_pure_python_rrf(spark, sf_dir):
     # independent reference: both rankers and the fusion recomputed in
     # Python from raw text/embeddings (the shared-formula hazard guard);
     # bm25 comes from the r15 reference helper so the two tests share
-    # one ground truth for the lexical side.  Migrated from
-    # tests/test_staged_r16.py with i67's pulled-forward registration.
+    # one ground truth for the lexical side.
     from csv_to_parquet_aws_datalake_spark.operators.llm_vectors import (
         _RRF_K,
         _RRF_SCALE,

@@ -1,14 +1,10 @@
-"""Round-17 additions: j12 streaming near-dup ingest (registered this
-round — graduated from the r16 staging module per the SURVEY §7.15
-ledger's named fate): the signature-equality and reingest-guarantee
-mechanism pins, migrated from tests/test_staged_r16.py, plus a
-batch-twin exchange pin (the streaming drain is skipped by the
-exchange-budget sweep by design, so the shuffle shape is gated here).
-Also c18 Bloom-filter semi-join reduction (pulled forward from the
-bank's spares — the r15/r16 precedent): its false-negative and
-plan-shape pins, migrated likewise.  Oracle parity runs through the
-registry-wide differential suite (tests/test_differential.py) like
-every registered query."""
+"""j12 streaming near-dup ingest: the signature-equality and
+reingest-guarantee mechanism pins, plus a batch-twin exchange pin (the
+streaming drain is skipped by the exchange-budget sweep by design, so
+the shuffle shape is gated here).  Also c18 Bloom-filter semi-join
+reduction: its false-negative and plan-shape pins.  Oracle parity runs
+through the registry-wide differential suite
+(tests/test_differential.py) like every registered query."""
 
 from __future__ import annotations
 
@@ -130,8 +126,7 @@ def test_c18_bloom_reduces_without_false_negatives(spark, sf_dir):
     # filter would also pass the oracle), and (2) no false negative —
     # every fact row whose key IS in the dim survives the probe (a
     # false negative silently drops rows; here it is checked directly
-    # on the key sets, not via the aggregate).  Migrated from
-    # tests/test_staged_r16.py with c18's pulled-forward registration.
+    # on the key sets, not via the aggregate).
     from csv_to_parquet_aws_datalake_spark.operators.joins import (
         _C18_SEEDS,
         _c18_bit_pos,

@@ -1,11 +1,8 @@
-"""Round-18 additions: a19 XML roundtrip (registered this round —
-graduated from the r16 staging module per the SURVEY §7.16 ledger's
-named fate): the byte-exact frame-fidelity and hostile-content pins,
-migrated from tests/test_staged_r16.py.  Also i68 LSH calibration
-census (pulled forward from the bank's spares — the r15/r16/r17
-precedent): its bucket-invariant and exact-duplicate pins, migrated
-likewise.  Oracle parity runs through the registry-wide differential
-suite (tests/test_differential.py) like every registered query."""
+"""a19 XML roundtrip: the byte-exact frame-fidelity and hostile-content
+pins.  Also i68 LSH calibration census: its bucket-invariant and
+exact-duplicate pins.  Oracle parity runs through the registry-wide
+differential suite (tests/test_differential.py) like every registered
+query."""
 
 from __future__ import annotations
 
@@ -16,7 +13,7 @@ from csv_to_parquet_aws_datalake_spark import registry
 registry.load_all()
 
 #: (name, sf_dir) -> collected rows, shared across this module's pins so
-#: a query executes once per module run (the test_staged_r16 convention)
+#: a query executes once per module run
 _ROWS_MEMO: dict[tuple[str, str], list] = {}
 
 

@@ -1,13 +1,10 @@
-"""Round-19 additions: j13 stream-stream LEFT OUTER join (registered
-this round — graduated from the r16 staging module per the SURVEY §7.17
-ledger's named fate): the sentinel/outer-semantics mechanism pins,
-migrated from tests/test_staged_r16.py, plus a batch-twin plan-shape
-pin (the streaming drain is skipped by the exchange-budget sweep by
-design, so the shuffle shape is gated here — the j12 convention).
-Also j14 state-store inspection (pulled forward from the bank's spares
-— the r15/r16/r17/r18 precedent): its state-metadata pins, migrated
-likewise.  Oracle parity runs through the registry-wide differential
-suite (tests/test_differential.py) like every registered query."""
+"""j13 stream-stream LEFT OUTER join: the sentinel/outer-semantics
+mechanism pins, plus a batch-twin plan-shape pin (the streaming drain
+is skipped by the exchange-budget sweep by design, so the shuffle shape
+is gated here — the j12 convention).  Also j14 state-store inspection:
+its state-metadata pins.  Oracle parity runs through the registry-wide
+differential suite (tests/test_differential.py) like every registered
+query."""
 
 from __future__ import annotations
 

@@ -1,10 +1,6 @@
-"""Round-20 additions: k18 audio silence segmentation (registered this
-round — graduated from the r16 staging module per the SURVEY §7.18
-ledger's named fate, the build's final named move): the
-pure-Python-reference, crafted-payload, and plan-shape pins, migrated
-from tests/test_staged_r16.py.  Also h26 VARIANT semi-structured
-extraction (pulled forward from the bank's spares — the r15–r19
-precedent): its try-semantics and plan pins, migrated likewise.  Oracle
+"""k18 audio silence segmentation: the pure-Python-reference,
+crafted-payload, and plan-shape pins.  Also h26 VARIANT semi-structured
+extraction: its try-semantics and plan pins.  Oracle
 parity runs through the registry-wide differential suite
 (tests/test_differential.py) like every registered query; both exchange
 budgets are pinned in tools/plan_budget.json at the §7.18 pre-measured

@@ -1674,3 +1674,40 @@ def test_assign_nearest_centroid_prebuilt_cenarr_is_identical(spark):
     handed = {(r["vec_id"], r["clabel"])
               for r in assign_nearest_centroid(df, cenarr=pinned).collect()}
     assert internal == handed and len(internal) == 12
+
+
+def test_profile_tool_records_three_layers_and_counters(sf_dir):
+    # tools/profile.py on a write query (a09: an eager curated write in its
+    # builder) and an iterative kernel (i27: checkpointed star rounds):
+    # both carry the three-layer split with build-time jobs, event-log
+    # counters and a plan fingerprint; no job ran outside a query's span.
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {"SPARK_GRAFT_CPUS": "4", "SPARK_GRAFT_DRIVER_MEM": "2g", **os.environ}
+    proc = subprocess.run(
+        [sys.executable, "tools/profile.py", os.path.join(os.path.dirname(sf_dir), "sf0.001"),
+         "a09", "i27"],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    with open(os.path.join(repo, ".scratch", "profile.json")) as fh:
+        out = json.load(fh)
+    assert out["failed"] == [] and out["unattributed"] == []
+    assert sorted(out["queries"]) == ["a09_curated_write", "i27_cc_bigstar"]
+    seconds = ("cold_s", "warm_s", "build_s", "execute_s", "transfer_s")
+    for name, r in out["queries"].items():
+        assert name in proc.stdout and r["build_jobs"] > 0, name
+        assert all(isinstance(r[k], float) for k in seconds), name
+        assert min(r["shuffle_read_bytes"], r["shuffle_write_bytes"], r["spill_bytes"]) >= 0
+        assert r["task_skew"] >= 1.0 and {"exchanges", "scans", "py_udf"} <= set(r["plan"])
+    # the checkpoint rounds shuffle, and the counters must see it
+    assert out["queries"]["i27_cc_bigstar"]["shuffle_write_bytes"] > 0
+    # a sibling script run from tools/ has tools/ first on sys.path, where
+    # profile.py must not shadow the standard library's `profile` (cProfile
+    # imports it, and pyspark imports cProfile)
+    code = ("import sys; sys.path.insert(0, 'tools'); import pyspark.sql, profile; "
+            "assert profile.Profile and 'tools' not in profile.__file__")
+    subprocess.run([sys.executable, "-c", code], cwd=repo, check=True, timeout=120)
