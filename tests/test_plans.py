@@ -5,6 +5,8 @@ scan, dimensions broadcast, top-k avoids global sorts, codegen is active.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from csv_to_parquet_aws_datalake_spark import registry
@@ -12,6 +14,8 @@ from csv_to_parquet_aws_datalake_spark.loader import load_table
 from csv_to_parquet_aws_datalake_spark.plans.checks import physical_plan
 
 registry.load_all()
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_filter_pushdown_reaches_parquet(spark, sf_dir):
@@ -351,38 +355,32 @@ def test_token_rarity_broadcasts_vocab(spark, sf_dir):
     assert "partial_count" in plan
 
 
-def test_registry_exchange_budget(spark, monkeypatch):
+def test_registry_exchange_budget(spark, sf_dir, monkeypatch):
     # The whole-registry shuffle gate (VERDICT r5 gap 3): every query's
     # physical plan must not exceed its committed exchange budget
     # (tools/plan_budget.json, regenerated with `plan_audit.py
     # --write-budget`).  A query that quietly grows shuffles between rounds
     # fails here instead of only printing a warning in the advisory sweep.
-    # Budgets were generated at sf0.001, so sweep the same scale.
+    # Budgets were generated at sf0.001, so sweep the same scale, and sweep
+    # every registered query on every run.
     # NOTE: the sweep executes write-query fixture setups under .scratch/,
     # so this suite must run single-process (no pytest-xdist) — a parallel
     # worker mid-read of the same curated layout would see it rebuilt.
-    monkeypatch.syspath_prepend("/root/repo/tools")
+    monkeypatch.syspath_prepend(os.path.join(_REPO, "tools"))
     import plan_audit
 
     budget = plan_audit.load_budget()
     assert budget, "tools/plan_budget.json missing — run plan_audit.py --write-budget"
-    # changed-family gating (SURVEY §7.15 / r16 suite-time levers): only
-    # queries whose module import-closure changed since the last GREEN
-    # sweep are re-swept; a shared-input change (session/loader/sources/
-    # budgets/testdata layout) re-sweeps everything.  A new query's module
-    # necessarily changed, so the unbudgeted gate still catches it.
-    names, new_state = plan_audit.changed_subset("/root/testdata/sf0.001")
-    if names is not None and not names:
-        return  # nothing changed since the last green sweep
-    results = plan_audit.sweep(spark, "/root/testdata/sf0.001", names=names)
+    results = plan_audit.sweep(spark, os.path.join(os.path.dirname(sf_dir), "sf0.001"))
+    # one record per registered query: the gate can never shrink to a subset
+    assert set(results) == set(registry.QUERIES)
 
     over, unbudgeted = [], []
     for name, counts in results.items():
         if "skipped" in counts:
             # the only legitimate skip is the streaming-drain marker; an
             # exception-skip (AnalysisException etc.) on a batch query
-            # must FAIL here, not pass-and-record-green — otherwise the
-            # gate bakes a broken module in as swept (review r17)
+            # must FAIL here
             assert counts["skipped"] == "streaming-drain", \
                 f"{name}: plan build failed: {counts['skipped']}"
             continue
@@ -398,7 +396,6 @@ def test_registry_exchange_budget(spark, monkeypatch):
     assert not unbudgeted, (
         "new queries need budgets (plan_audit.py --write-budget): "
         + ", ".join(unbudgeted))
-    plan_audit.record_green_sweep(new_state)  # only after a green sweep
 
 
 def test_global_window_linter_detects_and_clears(spark, sf_dir):

@@ -6,12 +6,15 @@ handling, deterministic dedup, and the §7.3 hazard cases.
 from __future__ import annotations
 
 import datetime
+import os
 
 from pyspark.sql import functions as F
 from pyspark.testing import assertDataFrameEqual
 
 from csv_to_parquet_aws_datalake_spark.loader import load_table
 from csv_to_parquet_aws_datalake_spark.operators.joins import asof_join_last_prior
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _ts(s: str) -> datetime.datetime:
@@ -394,7 +397,7 @@ def test_readme_coverage_table_matches_registry():
         assert m, f"unparseable query id: {qid}"
         fam[m.group(1)].add(int(m.group(2)))
 
-    readme = open("/root/repo/README.md", encoding="utf-8").read()
+    readme = open(os.path.join(_REPO, "README.md"), encoding="utf-8").read()
     spans = {}
     for cell in re.findall(r"^\| [a-z]\.[^|]*\| ([a-z]\d[^|]*?) \|",
                            readme, re.M):
@@ -537,7 +540,7 @@ def test_bench_compare_flags_regressions(tmp_path, capsys, monkeypatch):
     import json
     import sys
 
-    monkeypatch.syspath_prepend("/root/repo/tools")
+    monkeypatch.syspath_prepend(os.path.join(_REPO, "tools"))
     import bench_compare
 
     prev = {"value": 1.0, "queries": {"q_a": 0.5, "i34": 1.0}}
@@ -560,10 +563,10 @@ def test_bench_compare_baseline_parsed_from_md(tmp_path, capsys, monkeypatch):
     import json
     import sys
 
-    monkeypatch.syspath_prepend("/root/repo/tools")
+    monkeypatch.syspath_prepend(os.path.join(_REPO, "tools"))
     import bench_compare
 
-    baseline = bench_compare._baseline_from_md("/root/repo/BASELINE.md")
+    baseline = bench_compare._baseline_from_md(os.path.join(_REPO, "BASELINE.md"))
     assert baseline.get("q_join_topk") == 3.216, baseline
     assert len(baseline) == 10
 
@@ -1185,145 +1188,41 @@ def test_streaming_marker_is_explicit_and_complete():
     assert drains <= registry.STREAMING and drains
 
 
-def test_changed_family_gate_mechanics(monkeypatch, tmp_path):
-    # the in-suite sweep's changed-family gate (SURVEY §7.15 item 4):
-    # (1) the import closure follows cross-module kernel reuse
-    # (llm_vectors pulls BM25 from llm_text at call time, so an
-    # llm_text edit must re-sweep i67); (2) after a recorded green
-    # sweep an unchanged tree selects NOTHING; (3) a module-hash drift
-    # selects exactly that module's batch queries; (4) a shared-input
-    # (global) drift re-sweeps everything.
-    import json
-    import sys
-
-    monkeypatch.syspath_prepend("/root/repo/tools")
+def test_count_smells_counts_each_scan_once(spark, sf_dir, monkeypatch):
+    # a "FileScan parquet" node holds both scan names; it must count once
+    monkeypatch.syspath_prepend(os.path.join(_REPO, "tools"))
     import plan_audit
 
-    pkg = "csv_to_parquet_aws_datalake_spark"
-    closure = plan_audit._import_closure(f"{pkg}.operators.llm_vectors")
-    assert f"{pkg}.operators.llm_text" in closure
-    assert f"{pkg}.functions.vector" in closure
-    # 'from . import sub' names MODULES: a closure that reaches a
-    # package __init__ (here the operators package's parenthesized
-    # multi-line re-export) must pull in the re-exported submodules,
-    # not stop at the __init__ file (ADVICE r17)
-    init_closure = plan_audit._import_closure(f"{pkg}.operators")
-    assert f"{pkg}.operators.scans" in init_closure
-    assert f"{pkg}.operators.windows" in init_closure
-    # ...and EXCLUSION is as load-bearing as inclusion (review r18):
-    # every query module imports registry, whose load_all imports the
-    # whole package — the walk must stop at global shared-input modules
-    # or every closure degrades to all 25 modules and the gate re-runs
-    # a full sweep on any operator edit.  scans has no genuine
-    # dependency on the other operator families or streaming.
-    scans_closure = plan_audit._import_closure(f"{pkg}.operators.scans")
-    assert f"{pkg}.registry" in scans_closure  # included, not scanned
-    assert f"{pkg}.operators.llm_text" not in scans_closure
-    assert f"{pkg}.streaming.queries" not in scans_closure
-    assert f"{pkg}.operators.windows" not in scans_closure
-
-    state_path = str(tmp_path / "state.json")
-    monkeypatch.setattr(plan_audit, "STATE_PATH", state_path)
-    sf = "/root/testdata/sf0.001"
-
-    names, new_state = plan_audit.changed_subset(sf)
-    assert names is None  # no state recorded yet -> sweep everything
-    plan_audit.record_green_sweep(new_state)
-
-    names, _ = plan_audit.changed_subset(sf)
-    assert names == set()  # unchanged tree -> nothing to re-sweep
-
-    with open(state_path) as fh:
-        tampered = json.load(fh)
-    tampered["modules"][f"{pkg}.operators.joins"] = "drift"
-    with open(state_path, "w") as fh:
-        json.dump(tampered, fh)
-    names, _ = plan_audit.changed_subset(sf)
     from csv_to_parquet_aws_datalake_spark import registry
-    assert names == {n for n, fn in registry.QUERIES.items()
-                     if fn.__module__ == f"{pkg}.operators.joins"}
-    assert names
 
-    tampered["global"] = "drift"
-    with open(state_path, "w") as fh:
-        json.dump(tampered, fh)
-    names, _ = plan_audit.changed_subset(sf)
-    assert names is None
+    registry.load_all()
+    for name, n_scans in (("a01_scan_agg", 1), ("c01_inner_equi", 2)):
+        df = registry.QUERIES[name](spark, sf_dir)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("FileScan parquet") == n_scans, plan
+        assert plan_audit.count_smells(plan)["scans"] == n_scans, name
 
 
-def test_import_closure_is_ast_grounded(monkeypatch, tmp_path):
-    # ADVICE r18 x2: the closure walk parses the AST, so the three
-    # regex-era mis-read classes are pinned on a crafted package tree —
-    # (1) import-looking text inside a DOCSTRING never enters the
-    # closure, (2) an 'as' alias that collides with a real sibling
-    # module never probes that sibling in, (3) a '#' inside a string
-    # literal never truncates its line (the real import after it on the
-    # next line still resolves).
-    monkeypatch.syspath_prepend("/root/repo/tools")
+def test_plan_audit_fails_on_batch_plan_build_error(monkeypatch):
+    # only a stream drain is a legitimate skip: a batch query whose plan
+    # fails to build must make the CLI exit non-zero
+    import sys
+    import types
+
+    monkeypatch.syspath_prepend(os.path.join(_REPO, "tools"))
     import plan_audit
 
-    pkg_root = tmp_path / "pkg"
-    (pkg_root / "opx").mkdir(parents=True)
-    (pkg_root / "__init__.py").write_text("")
-    (pkg_root / "opx" / "__init__.py").write_text(
-        "from . import alpha as windows\n")
-    root = plan_audit._PKG_ROOT
-    (pkg_root / "opx" / "alpha.py").write_text(
-        '"""docstring with import-looking text:\n'
-        "from . import phantom\n"
-        '"""\n'
-        'S = "x # not a comment"\n'
-        "from . import beta\n"
-        # the two ABSOLUTE package-internal forms (ADVICE r19: the
-        # relative-only claim was a convention, not enforced) plus
-        # external absolute imports that must STAY external
-        f"from {root}.opx import gamma\n"
-        f"import {root}.opx.delta\n"
-        "import os\n"
-        "from collections import Counter\n"
-        # a foreign top-level module that merely SHARES the package-name
-        # prefix must never enter the closure (review r20: a bare
-        # startswith admitted it, and _module_file would then mis-resolve
-        # its submodule paths onto real package files)
-        f"import {root}_ext\n"
-        f"from {root}_ext.opx import beta\n")
-    (pkg_root / "opx" / "beta.py").write_text("Y = 1\n")
-    (pkg_root / "opx" / "windows.py").write_text("Z = 1\n")
-    (pkg_root / "opx" / "phantom.py").write_text("P = 1\n")
-    (pkg_root / "opx" / "gamma.py").write_text("G = 1\n")
-    (pkg_root / "opx" / "delta.py").write_text("D = 1\n")
-    monkeypatch.setattr(plan_audit, "_PKG", str(pkg_root))
+    from csv_to_parquet_aws_datalake_spark import session
 
-    closure = plan_audit._import_closure(f"{root}.opx")
-    assert f"{root}.opx.alpha" in closure       # the genuine re-export
-    assert f"{root}.opx.beta" in closure        # real import after the '#' string
-    assert f"{root}.opx.gamma" in closure       # absolute ImportFrom (ADVICE r19)
-    assert f"{root}.opx.delta" in closure       # plain Import (ADVICE r19)
-    assert f"{root}.opx.windows" not in closure  # 'as' alias, not a dep
-    assert f"{root}.opx.phantom" not in closure  # docstring text, not a dep
-    # externals stay out: nothing outside the package root ever enters,
-    # dot-bounded so the shared-prefix foreign module is caught too
-    assert all(m == root or m.startswith(root + ".") for m in closure)
-    assert not any(m.startswith(f"{root}_ext") for m in closure)
-
-
-def test_import_closure_syntax_error_is_loud(monkeypatch, tmp_path):
-    # ADVICE r19: a mid-edit unparsable file must fail the walk with a
-    # message NAMING the file, not a bare ast traceback
-    import pytest
-
-    monkeypatch.syspath_prepend("/root/repo/tools")
-    import plan_audit
-
-    pkg_root = tmp_path / "pkg"
-    (pkg_root / "opx").mkdir(parents=True)
-    (pkg_root / "__init__.py").write_text("")
-    (pkg_root / "opx" / "__init__.py").write_text("")
-    (pkg_root / "opx" / "bad.py").write_text("def broken(:\n")
-    monkeypatch.setattr(plan_audit, "_PKG", str(pkg_root))
-
-    with pytest.raises(RuntimeError, match=r"bad\.py.*not.*parsable"):
-        plan_audit._import_closure(f"{plan_audit._PKG_ROOT}.opx.bad")
+    monkeypatch.setattr(session, "build_session", lambda *a, **k: types.SimpleNamespace(
+        sparkContext=types.SimpleNamespace(setLogLevel=lambda level: None)))
+    monkeypatch.setattr(sys, "argv", ["plan_audit.py", "unused_sf_dir"])
+    drain = {"j01_stream": {"skipped": "streaming-drain"}}
+    monkeypatch.setattr(plan_audit, "sweep", lambda *a: drain)
+    assert plan_audit.main() == 0
+    failed = {**drain, "a01_scan_agg": {"skipped": "AnalysisException"}}
+    monkeypatch.setattr(plan_audit, "sweep", lambda *a: failed)
+    assert plan_audit.main() == 1
 
 
 def test_i67_rank_construction_ties_at_the_cut(spark):
@@ -1682,18 +1581,16 @@ def test_profile_tool_records_three_layers_and_counters(sf_dir):
     # both carry the three-layer split with build-time jobs, event-log
     # counters and a plan fingerprint; no job ran outside a query's span.
     import json
-    import os
     import subprocess
     import sys
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = {"SPARK_GRAFT_CPUS": "4", "SPARK_GRAFT_DRIVER_MEM": "2g", **os.environ}
     proc = subprocess.run(
         [sys.executable, "tools/profile.py", os.path.join(os.path.dirname(sf_dir), "sf0.001"),
          "a09", "i27"],
-        cwd=repo, env=env, capture_output=True, text=True, timeout=600)
+        cwd=_REPO, env=env, capture_output=True, text=True, timeout=600)
     assert proc.returncode == 0, proc.stderr[-2000:]
-    with open(os.path.join(repo, ".scratch", "profile.json")) as fh:
+    with open(os.path.join(_REPO, ".scratch", "profile.json")) as fh:
         out = json.load(fh)
     assert out["failed"] == [] and out["unattributed"] == []
     assert sorted(out["queries"]) == ["a09_curated_write", "i27_cc_bigstar"]
@@ -1710,4 +1607,4 @@ def test_profile_tool_records_three_layers_and_counters(sf_dir):
     # imports it, and pyspark imports cProfile)
     code = ("import sys; sys.path.insert(0, 'tools'); import pyspark.sql, profile; "
             "assert profile.Profile and 'tools' not in profile.__file__")
-    subprocess.run([sys.executable, "-c", code], cwd=repo, check=True, timeout=120)
+    subprocess.run([sys.executable, "-c", code], cwd=_REPO, check=True, timeout=120)

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -51,7 +52,9 @@ def count_smells(plan: str) -> dict:
     """Count the plan nodes that matter at scale in one executedPlan string.
 
     Real shuffles only — BroadcastExchange is the cheap shape we WANT, and
-    ReusedExchange is a reuse, not a new shuffle.
+    ReusedExchange is a reuse, not a new shuffle.  A scan node counts
+    once: "FileScan parquet" holds both scan names, and one left-to-right
+    regex pass matches it only as "FileScan".
     """
     return {
         "exchanges": (plan.count("Exchange hashpartitioning")
@@ -59,18 +62,17 @@ def count_smells(plan: str) -> dict:
                       + plan.count("Exchange SinglePartition")),
         "cartesian": plan.count("CartesianProduct"),
         "py_udf": plan.count("BatchEvalPython"),
-        "scans": plan.count("FileScan") + plan.count("Scan parquet"),
+        "scans": len(re.findall("FileScan|Scan parquet", plan)),
         "wscg": plan.count("WholeStageCodegen"),
     }
 
 
-def sweep(spark, sf_dir: str, prefixes: tuple[str, ...] = ("",),
-          names: set[str] | None = None) -> dict:
+def sweep(spark, sf_dir: str, prefixes: tuple[str, ...] = ("",)) -> dict:
     """Build every matching registry query's physical plan and count smells.
 
-    Returns {name: counts-dict}; queries whose plan cannot be pre-executed
-    here (streaming) are omitted.  ``names`` (if given) restricts the sweep
-    to that subset — the changed-family gate's hook.
+    Returns {name: counts-dict} with one record per matching query: a
+    streaming query, or one whose plan fails to build, records
+    {"skipped": reason} instead of counts.
     """
     from csv_to_parquet_aws_datalake_spark import registry
 
@@ -78,8 +80,6 @@ def sweep(spark, sf_dir: str, prefixes: tuple[str, ...] = ("",),
     out = {}
     for name, fn in sorted(registry.QUERIES.items()):
         if not name.startswith(prefixes):
-            continue
-        if names is not None and name not in names:
             continue
         if name in registry.STREAMING:
             # streaming rows (the registry's explicit marker, not the
@@ -99,271 +99,6 @@ def sweep(spark, sf_dir: str, prefixes: tuple[str, ...] = ("",),
             continue
         out[name] = count_smells(plan)
     return out
-
-
-# ---- changed-family gating of the in-suite sweep (SURVEY §7.15 item 4) ----
-#
-# The full sweep builds ~200 physical plans and executes write-query fixture
-# setups — 26-37 s of every pytest run even when no operator changed.  The
-# honest trim (the sf0.001 re-point was probed and REJECTED in r16): sweep
-# only queries whose defining module — or anything in that module's
-# package-internal import closure — changed since the last GREEN sweep, and
-# everything whenever a shared input (session confs, loader, sources,
-# budgets, this tool, the sf0.001 data layout) changed.  State lives in
-# tools/plan_sweep_state.json, written ONLY after a green sweep, so a red or
-# interrupted run always re-sweeps.  The state file is a PER-MACHINE cache
-# (gitignored, never committed — ADVICE r17): shipping one machine's green
-# record would make the sweep a silent no-op anywhere the environment
-# fingerprint happens to match, and test runs would churn the working tree.
-
-STATE_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                          "plan_sweep_state.json")
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-_PKG = os.path.join(_REPO, "csv_to_parquet_aws_datalake_spark")
-
-
-def _sha_file(path: str) -> str:
-    import hashlib
-    with open(path, "rb") as fh:
-        return hashlib.sha256(fh.read()).hexdigest()
-
-
-def _resolve_rel_import(mod_name: str, dots: str, target: str,
-                        is_pkg: bool = False) -> str | None:
-    """Module name for ``from <dots><target> import ...`` seen in mod_name.
-
-    ``is_pkg`` marks mod_name as a package (__init__.py): a level-1
-    relative import there resolves against the package ITSELF, not its
-    parent — without this, closures reached through a subpackage
-    re-export would silently drop the re-exported module (review r17)."""
-    ctx = mod_name.split(".") if is_pkg else mod_name.split(".")[:-1]
-    up = len(dots) - 1
-    base = ctx[:len(ctx) - up] if up <= len(ctx) else []
-    full = ".".join(base + ([target] if target else []))
-    return full or None
-
-
-def _module_file(mod_name: str) -> str | None:
-    rel = mod_name.split(".")[1:]  # drop the package root
-    cand = os.path.join(_PKG, *rel) + ".py"
-    if os.path.exists(cand):
-        return cand
-    cand = os.path.join(_PKG, *rel, "__init__.py")
-    return cand if os.path.exists(cand) else None
-
-
-#: modules whose changes are covered by the GLOBAL shared-input
-#: fingerprint (_fingerprints' `shared` list).  The closure walk
-#: includes them but never scans INSIDE them: descending into
-#: registry.load_all's import-everything glue would fold every package
-#: module into every query module's closure and silently degrade the
-#: changed-family gate back to a full sweep on any operator edit — the
-#: exact cost the gate exists to avoid (review r18; their own deps are
-#: re-swept through the global fingerprint instead).
-_PKG_ROOT = "csv_to_parquet_aws_datalake_spark"
-_GLOBAL_MODULES = {_PKG_ROOT, f"{_PKG_ROOT}.registry",
-                   f"{_PKG_ROOT}.session", f"{_PKG_ROOT}.loader"}
-
-
-def _is_global_module(mod_name: str) -> bool:
-    return (mod_name in _GLOBAL_MODULES
-            or mod_name.startswith(f"{_PKG_ROOT}.sources"))
-
-
-def _is_pkg_internal(mod_name: str) -> bool:
-    """True iff mod_name IS the package root or a dotted submodule of it
-    — a bare startswith would also admit foreign top-level modules that
-    merely share the prefix (review r20)."""
-    return (mod_name == _PKG_ROOT
-            or mod_name.startswith(_PKG_ROOT + "."))
-
-
-def _import_closure(mod_name: str) -> set[str]:
-    """mod_name plus every package-internal module it (transitively)
-    imports, found by parsing each source file's AST for relative
-    ImportFrom nodes — cross-family kernel reuse (llm_vectors ->
-    llm_text's BM25, operators -> functions.scalar) must invalidate the
-    importer when the imported file changes.  AST, not regex (ADVICE
-    r18 x2): a '#' inside a string literal must never truncate the line
-    it sits on, import-looking text inside a docstring must never
-    match, and an 'as' alias must never probe as a sibling module name
-    — the syntax tree gives the real import statements with their real
-    names, closing all three classes at once.  Global shared-input
-    modules terminate the walk (see `_GLOBAL_MODULES`)."""
-    import ast
-    seen: set[str] = set()
-    todo = [mod_name]
-    while todo:
-        m = todo.pop()
-        if m in seen:
-            continue
-        seen.add(m)
-        if _is_global_module(m) and m != mod_name:
-            continue
-        path = _module_file(m)
-        if path is None:
-            continue
-        with open(path) as fh:
-            try:
-                tree = ast.parse(fh.read(), filename=path)
-            except SyntaxError as exc:
-                # ADVICE r19: the regex-era walk degraded gracefully on a
-                # mid-edit file; the AST walk must not die with a bare
-                # traceback — name the file and fail loudly instead
-                raise RuntimeError(
-                    f"plan_audit import-closure walk: {path} is not "
-                    f"parsable Python ({exc.msg} at line {exc.lineno}); "
-                    "the change fingerprint cannot be computed mid-edit — "
-                    "re-run once the file parses") from exc
-        is_pkg = os.path.basename(path) == "__init__.py"
-        for node in ast.walk(tree):
-            # three statement shapes name package-internal dependencies
-            # (ADVICE r19: 'written relatively' was a convention, not
-            # enforced — the absolute forms now resolve too):
-            #   from .x import y         relative ImportFrom (level >= 1)
-            #   from PKG.x import y      absolute ImportFrom into the pkg
-            #   import PKG.x             plain Import of a pkg module
-            # stdlib/pyspark absolute imports fail the _PKG_ROOT prefix and
-            # stay external — the check is dot-bounded (review r20): a
-            # foreign top-level module that merely SHARES the prefix
-            # ("<pkg>_ext") must never enter the closure, where
-            # _module_file would mis-resolve it onto real package files.
-            # ast.walk also reaches imports nested in function bodies,
-            # which the call-time kernel reuse relies on
-            if isinstance(node, ast.Import):
-                todo.extend(alias.name for alias in node.names
-                            if _is_pkg_internal(alias.name))
-                continue
-            if not isinstance(node, ast.ImportFrom):
-                continue
-            if node.level:
-                nxt = _resolve_rel_import(m, "." * node.level,
-                                          node.module or "", is_pkg=is_pkg)
-            else:
-                nxt = node.module or ""
-            if not (nxt and _is_pkg_internal(nxt)):
-                continue
-            todo.append(nxt)
-            # 'from . import sub' / 'from ..pkg import mod' (and the
-            # absolute 'from PKG import sub' form) name MODULES,
-            # not just symbols: when the resolved target is a package,
-            # every imported NAME that is itself a module file belongs in
-            # the closure — resolving to the package __init__ alone would
-            # silently drop that dependency from the change fingerprint
-            # (ADVICE r17).  alias.name is the real imported name; the
-            # 'as' binding (alias.asname) is a local rename and never a
-            # dependency, so it is never probed (ADVICE r18).
-            path_nxt = _module_file(nxt)
-            if path_nxt and os.path.basename(path_nxt) == "__init__.py":
-                for alias in node.names:
-                    sub = f"{nxt}.{alias.name}"
-                    if _module_file(sub):
-                        todo.append(sub)
-    return {m for m in seen if _module_file(m)}
-
-
-def _fold_testdata(g, path: str) -> None:
-    """Fold one testdata path (file or directory-style parquet output)
-    into the global fingerprint: each entry's base name (directories
-    included — a renamed partition directory changes query results with
-    byte-identical files, review r18), size, mtime, and the first/last
-    4 KiB of each file's content (see the ADVICE-r17 note at the call
-    site)."""
-    if os.path.isdir(path):
-        g.update(f"{os.path.basename(path)}/".encode())
-        for f in sorted(os.listdir(path)):
-            _fold_testdata(g, os.path.join(path, f))
-        return
-    st = os.stat(path)
-    g.update(f"{os.path.basename(path)}:{st.st_size}:"
-             f"{st.st_mtime_ns}:".encode())
-    with open(path, "rb") as fh:
-        g.update(fh.read(4096))
-        fh.seek(max(0, st.st_size - 4096))
-        g.update(fh.read(4096))
-
-
-def _fingerprints(sf_dir: str) -> dict:
-    """{"global": sha, "modules": {module: closure-sha}} for the gate."""
-    import glob as _glob
-    import hashlib
-
-    from csv_to_parquet_aws_datalake_spark import registry
-
-    registry.load_all()
-    shared = sorted(
-        [os.path.join(_PKG, "registry.py"),
-         os.path.join(_PKG, "session.py"),
-         os.path.join(_PKG, "loader.py"),
-         os.path.abspath(__file__).rstrip("c"),
-         BUDGET_PATH,
-         os.path.join(_REPO, "tests", "conftest.py")]
-        + _glob.glob(os.path.join(_PKG, "sources", "*.py")))
-    g = hashlib.sha256()
-    # the execution environment is a shared input too: a PySpark/JVM
-    # upgrade changes planner heuristics without touching any
-    # fingerprinted file, and must re-sweep everything (review r17)
-    import pyspark
-    g.update(f"pyspark={pyspark.__version__};"
-             f"java={os.environ.get('JAVA_HOME', '')}".encode())
-    for p in shared:
-        if os.path.exists(p):
-            g.update(p.encode() + b"\0" + _sha_file(p).encode())
-    # the sf layout: budgets were written at sf0.001 and the INITIAL
-    # adaptive plan's join strategies depend on scan-size estimates, so a
-    # regenerated testdata tree must re-sweep everything.  Name + size
-    # alone is forgeable (a regenerated tree with identical sizes, or a
-    # directory-style parquet output where getsize stats a constant
-    # 4096), so fold in mtime plus the first/last 4 KiB of content —
-    # parquet footers carry the row-group stats, so any regeneration
-    # lands in the tail bytes (ADVICE r17)
-    for p in sorted(_glob.glob(os.path.join(sf_dir, "*.parquet"))):
-        _fold_testdata(g, p)
-
-    file_sha: dict[str, str] = {}
-    mods: dict[str, str] = {}
-    for name, fn in registry.QUERIES.items():
-        if name in registry.STREAMING:
-            continue
-        m = fn.__module__
-        if m in mods:
-            continue
-        h = hashlib.sha256()
-        for dep in sorted(_import_closure(m)):
-            p = _module_file(dep)
-            if p not in file_sha:
-                file_sha[p] = _sha_file(p)
-            h.update(dep.encode() + b"\0" + file_sha[p].encode())
-        mods[m] = h.hexdigest()
-    return {"global": g.hexdigest(), "modules": mods}
-
-
-def changed_subset(sf_dir: str) -> tuple[set[str] | None, dict]:
-    """(names whose module closure changed since the last green sweep —
-    None means sweep everything, empty set means nothing changed), plus
-    the new state to record after a green sweep."""
-    from csv_to_parquet_aws_datalake_spark import registry
-
-    new_state = _fingerprints(sf_dir)
-    try:
-        with open(STATE_PATH) as fh:
-            old = json.load(fh)
-    except (OSError, ValueError):
-        return None, new_state
-    if old.get("global") != new_state["global"]:
-        return None, new_state
-    old_mods = old.get("modules", {})
-    changed = {m for m, h in new_state["modules"].items()
-               if old_mods.get(m) != h}
-    names = {n for n, fn in registry.QUERIES.items()
-             if n not in registry.STREAMING and fn.__module__ in changed}
-    return names, new_state
-
-
-def record_green_sweep(new_state: dict) -> None:
-    with open(STATE_PATH, "w") as fh:
-        json.dump(new_state, fh, indent=1, sort_keys=True)
-        fh.write("\n")
 
 
 def load_budget() -> dict[str, int]:
@@ -406,6 +141,10 @@ def main() -> int:
         if "skipped" in counts:
             print(f"{name:34s} {'-':>4s} {'-':>4s} {'-':>5s} {'-':>4s} {'-':>4s}  "
                   f"skipped: {counts['skipped']}")
+            # only a stream drain is skipped by design; a batch query
+            # whose plan fails to build is a failure
+            if counts["skipped"] != "streaming-drain":
+                flagged.append((name, [f"PLAN_FAILED({counts['skipped']})"]))
             continue
         flags = flags_for(name, counts, budget)
         if flags:
