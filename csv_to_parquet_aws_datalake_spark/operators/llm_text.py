@@ -215,8 +215,9 @@ def i22_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     i22 (and i24, which runs it) keeps this loop rather than calling i27's
     cc_components: near-dup clusters have a tiny diameter, and on the
-    benchmark lake (sf 0.002, local[4], 7 reps) this loop took 19 jobs and
-    2.0 CPU s per call against the star kernel's 29 jobs and 3.1 CPU s.
+    benchmark lake (sf 0.002, local[4], median of 7 warm calls, generated
+    classes reused) this loop took 19 jobs and 1.5 CPU s per call against
+    the star kernel's 29 jobs and 2.4 CPU s.
 
     Iterations are bounded at I22_MAX_ITERS: min-label propagation
     converges in graph-diameter rounds, so hitting the cap means a bug or

@@ -9,9 +9,13 @@ return), ``execute_s`` (a noop-sink run), ``transfer_s`` (collect() minus
 noop), ``warm_s`` (build + collect).  Spark's JSON event log gives that
 run's ``shuffle_read_bytes``, ``shuffle_write_bytes``, ``spill_bytes`` and
 ``task_skew`` (slowest over median task, worst stage) for build and
-execute (the collect re-runs the plan).  ``plan`` is plan_audit's
-fingerprint.  Each call runs in its own job group; event-log groups
-outside every span are listed under ``unattributed`` and fail the run.
+execute (the collect re-runs the plan).  ``cold_compiles`` and
+``warm_compiles`` count Janino compilations (Spark's CodegenMetrics) in the
+cold and the kept warm run; a warm count above 0 means the codegen cache
+thrashes or a kernel puts a per-call literal into generated code.  ``plan``
+is plan_audit's fingerprint.  Each call runs in its own job group;
+event-log groups outside every span are listed under ``unattributed`` and
+fail the run.
 
 j-family entries carry ~1-2 s of availableNow micro-batch setup; h06/b05/
 h18-style full projections are transfer-bound; i22/i27/i59-style kernels
@@ -47,12 +51,16 @@ if __name__ == "__main__":
 def profile_query(spark, tracer, name: str, q, sf_dir: str) -> tuple[dict, tuple]:
     """Run one query cold, then twice split into layers; returns its record
     plus the span labels of the faster warm run."""
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME().getCount
+    c0 = compiles()
     with tracer.span(f"{name}/cold"):
         t0 = time.perf_counter()
         df = q(spark, sf_dir)
         plan = count_smells(df._jdf.queryExecution().executedPlan().toString())
         df.collect()
         cold = time.perf_counter() - t0
+    cold_compiles = compiles() - c0
     # warm = min of two runs: 190+ queries share one long-lived context,
     # and accumulated shuffle/GC state can tax a single shot 3-5x (i06
     # measured 14 s mid-sweep vs 2.7 s isolated — same lesson as
@@ -61,6 +69,7 @@ def profile_query(spark, tracer, name: str, q, sf_dir: str) -> tuple[dict, tuple
     runs = []
     for i in range(2):
         label = f"{name}/{{}}/{i}".format
+        c0 = compiles()
         with tracer.span(label("build")):
             df = q(spark, sf_dir)
         with tracer.span(label("execute")):
@@ -72,6 +81,8 @@ def profile_query(spark, tracer, name: str, q, sf_dir: str) -> tuple[dict, tuple
                       "build_s": b.seconds, "build_jobs": b.jobs,
                       "execute_s": x.seconds,
                       "transfer_s": stats.transfer(c.seconds, x.seconds),
+                      "cold_compiles": cold_compiles,
+                      "warm_compiles": compiles() - c0,
                       "plan": plan}, (label("build"), label("execute"))))
     return min(runs, key=lambda run: run[0]["warm_s"])
 
@@ -146,11 +157,11 @@ def main() -> int:
 
     rows = sorted(records.items(), key=lambda kv: -kv[1]["warm_s"])
     print(f"{'query':35s} {'cold_s':>7} {'warm_s':>7} {'build_s':>7} "
-          f"{'jobs':>4} {'exec_s':>7} {'xfer_s':>7}")
+          f"{'jobs':>4} {'exec_s':>7} {'xfer_s':>7} {'c_comp':>6} {'w_comp':>6}")
     for name, r in rows:
         print(f"{name:35s} {r['cold_s']:7.2f} {r['warm_s']:7.2f} "
               f"{r['build_s']:7.2f} {r['build_jobs']:4d} {r['execute_s']:7.2f} "
-              f"{r['transfer_s']:7.2f}")
+              f"{r['transfer_s']:7.2f} {r['cold_compiles']:6d} {r['warm_compiles']:6d}")
     for name in failed:
         print(f"{name:35s} {'ERR':>7}")
 
