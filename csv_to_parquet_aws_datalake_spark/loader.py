@@ -194,8 +194,8 @@ def widen_if_narrow(df: DataFrame, *key: str) -> DataFrame:
     # in-memory localCheckpoint upstream is not) — for a non-file frame
     # whose planned partitioning is Unknown the estimate is 0, treated
     # as healthy, so a narrow constructed frame would silently skip
-    # widening.  Every current caller (i34/i48/i51/i54, the stress pins)
-    # passes a scan-rooted frame.
+    # widening.  Every current caller (i34/i48/i51/i54) passes a
+    # scan-rooted frame.
     par = df.sparkSession.sparkContext.defaultParallelism
     splits = scan_split_estimate(df)
     if splits == 0 or splits >= min(4, par):

@@ -601,9 +601,7 @@ def c18_bloom_semijoin_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def bloom_semijoin_agg(orders: DataFrame, li: DataFrame) -> DataFrame:
-    """The c18 pipeline over explicit frames — the registered kernel
-    the scale-stress harness drives on amplified disjoint-orderkey
-    shards (tools/scale_stress.py, row bloom-semijoin[c18-kernel])."""
+    """The c18 pipeline over explicit (orders, lineitem) frames."""
     dim = (orders.filter(F.col("o_orderpriority") == "1-URGENT")
            .select("o_orderkey"))
     words = F.broadcast(

@@ -749,8 +749,8 @@ def i66_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def dsir_importance_frame(d: DataFrame) -> DataFrame:
     """The i66 kernel over any (doc_id, lang, text) frame — factored
-    out (the i65/i64 convention) so tools/scale_stress.py drives the
-    registered formulation; callers pre-filter NULL text."""
+    out (the i65/i64 convention) so property tests drive the registered
+    formulation; callers pre-filter NULL text."""
     d = (d.select("doc_id", "lang", F.split("text", " ").alias("t"))
          .filter(F.size("t") >= 2))
     bg = d.select(

@@ -368,9 +368,8 @@ def i07_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def token_tf_df(d: DataFrame) -> DataFrame:
     """The i07 kernel over any (doc_id, text, ...) frame: corpus-wide term
-    and document frequencies (the vocabulary-build aggregate).  Factored
-    out so tools/scale_stress.py amplifies the registered implementation;
-    i07 adds the bounded top-30 TakeOrdered on the result."""
+    and document frequencies (the vocabulary-build aggregate); i07 adds
+    the bounded top-30 TakeOrdered on the result."""
     return (
         d.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
         .groupBy("tok")
@@ -405,9 +404,7 @@ def i08_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def tfidf_top_terms(d: DataFrame, top_n: int = 3) -> DataFrame:
-    """The i08 kernel over any (doc_id, text, ...) frame — factored out so
-    tools/scale_stress.py amplifies the registered implementation, not a
-    lookalike."""
+    """The i08 kernel over any (doc_id, text, ...) frame."""
     n_docs = F.broadcast(d.agg(F.count(F.lit(1)).alias("nd")))
     tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
     # pin tf: both the score join and the df aggregate consume it, and
@@ -949,8 +946,7 @@ def i56_gopher_rule_breakdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def gopher_rule_breakdown(d: DataFrame) -> DataFrame:
-    """The i56 kernel over any (source, text) frame — factored out (r13)
-    so tools/scale_stress.py drives the registered formulation."""
+    """The i56 kernel over any (source, text) frame."""
     m = (d.select("source", F.split("text", " ").alias("toks"))
          .selectExpr(
              "source",
@@ -1072,8 +1068,7 @@ def cc_components(edges: DataFrame) -> DataFrame:
     (doc_id, mn) where mn is the minimum node id reachable from doc_id
     (i.e. its component label candidate; label = least(doc_id, mn)).  Only
     nodes with at least one edge appear — callers handle isolated nodes.
-    Factored out so tools/scale_stress.py can drive it on amplified edge
-    sets."""
+    Factored out so unit tests drive it on constructed edge sets."""
     def large_star(sym: DataFrame) -> DataFrame:
         # connect every neighbor v > u to m(u) = min(N(u) + {u}); the
         # duplicates this can emit are removed by small_star's distinct()
@@ -1805,8 +1800,8 @@ def dup_token_cover(hits: DataFrame) -> DataFrame:
 
 def span_dedup_spans(docs: DataFrame) -> DataFrame:
     """Kernel behind i48: (doc_id, text) -> maximal spans of corpus-
-    duplicated 5-grams.  Factored out so tools/scale_stress.py can
-    amplify it — the skew-safe dup-gram test (partial-agg count +
+    duplicated 5-grams.  Factored out so constructed-frame tests drive
+    it — the skew-safe dup-gram test (partial-agg count +
     semi-join, see dup_gram_positions) followed by one doc-keyed island
     merge, every stage corpus-linear and hot-gram-splittable."""
     hits = dup_gram_positions(docs)
@@ -2142,9 +2137,8 @@ def i65_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def quality_classifier_scores(d: DataFrame) -> DataFrame:
-    """The i65 kernel over any (doc_id, text) frame — factored out (r13)
-    so tools/scale_stress.py drives the registered formulation; callers
-    pre-filter NULL text (the registered wrapper's contract)."""
+    """The i65 kernel over any (doc_id, text) frame; callers pre-filter
+    NULL text (the registered wrapper's contract)."""
     w = ("(locate(substring(h, 1, 1), '0123456789abcdef') - 1) * 16"
          " + (locate(substring(h, 2, 1), '0123456789abcdef') - 1) - 128")
     return (
@@ -2234,9 +2228,7 @@ _DECON_TAU = 1.10  # between the per-query score p95 and max at every SF
 def bm25_query_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The UNPINNED (query_id, doc_id, bm25) frame behind i64 — every
     nonzero-scoring document for each benchmark probe; thin loader
-    wrapper over :func:`bm25_scores_frame` (factored out at r15
-    registration so tools/scale_stress.py drives the registered
-    formulation, the i65 kernel convention)."""
+    wrapper over :func:`bm25_scores_frame`, shared by i64 and i67."""
     d = (load_table(spark, sf_dir, "documents")
          .filter(F.col("text").isNotNull()))
     return bm25_scores_frame(d)
@@ -2425,8 +2417,8 @@ _I68_BROADCAST_MAX_PAIRS = 2_000_000
 
 def lsh_calibration_frame(d: DataFrame) -> DataFrame:
     """The i68 kernel over any (doc_id, text, ...) frame — factored out
-    (the i65/i64 convention) so crafted-frame tests and
-    tools/scale_stress.py drive the exact registered formulation.
+    (the i65/i64 convention) so crafted-frame tests drive the exact
+    registered formulation.
 
     r21 restructure (guide §2.3 "shuffle fewer bytes" / §3.2 "reduce the
     big side before shuffling"): the exact-Jaccard side only matters for

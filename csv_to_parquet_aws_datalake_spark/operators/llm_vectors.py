@@ -346,27 +346,36 @@ def i19_euclidean_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def srp_basis(emb: DataFrame, bits: int = 3) -> DataFrame:
-    """1-row frame b1..b<bits>: the data-derived sign-random-projection
-    basis — embeddings ``vec_id 1..bits`` (deterministic, no RNG, so
-    oracles can reproduce it).  Single-sourced (r10 review: this block
-    existed in i18, tools/scale_stress.srp_pairs_shape, and the staged
-    ANN assignment; a basis-rule change must hit every consumer at
-    once).  A missing basis id leaves its column NULL, which
-    ``srp_code`` degrades to a constantly-0 bit on both engines."""
-    return emb.filter(F.col("vec_id").isin(*range(1, bits + 1))).agg(
+# the SRP code width of i18 and i59 (srp_basis/srp_code).  Both oracles'
+# three-basis-vector CASE blocks and 4/2/1 bit weights are STRUCTURALLY
+# three-bit, which the raise below _ANN_ASSIGNED_CTES_SQL guards —
+# changing the constant without rewriting them fails at import, not as a
+# hash mismatch.
+_SRP_BITS = 3
+
+
+def srp_basis(emb: DataFrame) -> DataFrame:
+    """1-row frame b1..b<_SRP_BITS>: the data-derived
+    sign-random-projection basis — embeddings ``vec_id 1.._SRP_BITS``
+    (deterministic, no RNG, so oracles can reproduce it).
+    Single-sourced for i18 and the i59 assignment: a basis-rule change
+    must hit every consumer at once.  A missing basis id leaves its
+    column NULL, which ``srp_code`` degrades to a constantly-0 bit on
+    both engines."""
+    return emb.filter(F.col("vec_id").isin(*range(1, _SRP_BITS + 1))).agg(
         *[F.max(F.when(F.col("vec_id") == i, F.col("embedding")))
-          .alias(f"b{i}") for i in range(1, bits + 1)])
+          .alias(f"b{i}") for i in range(1, _SRP_BITS + 1)])
 
 
-def srp_code(col: str, bits: int = 3):
-    """The b-bit sign code of ``col`` against basis columns b1..b<bits>
-    in scope: bit i set iff dot(col, b_i) > 0 (NULL > 0 is false-y in
-    the CASE on both engines).  srp_basis's expression twin."""
+def srp_code(col: str):
+    """The _SRP_BITS-bit sign code of ``col`` against basis columns
+    b1..b<_SRP_BITS> in scope: bit i set iff dot(col, b_i) > 0 (NULL > 0
+    is false-y in the CASE on both engines).  srp_basis's expression
+    twin."""
     b = F.lit(0)
-    for i in range(1, bits + 1):
+    for i in range(1, _SRP_BITS + 1):
         b = b + F.when(dot(col, f"b{i}") > 0,
-                       F.lit(1 << (bits - i))).otherwise(0)
+                       F.lit(1 << (_SRP_BITS - i))).otherwise(0)
     return b
 
 
@@ -606,17 +615,15 @@ def semdedup_census(emb: DataFrame, tau: float = _SEMDEDUP_TAU,
     map-side scoring, vec_id argmax window — single-sourced with i29, r9
     review); the pair stage is an EQUI-join on the assigned cluster —
     candidates never cross clusters, the bucketing that separates this
-    from i06's all-pairs baseline.  MEASURED scale tension, r10
-    correction of the r9 record: the r9 stress read "2.3x vs linear at
-    K=4" and blamed the dense O(n·k) assignment, but that measurement
-    was substantially an AMPLIFIER ARTIFACT — verbatim vector copies
-    make every replica's centroids identical, so the clabel tie-break
-    funnels ALL replicas into the lexicographically-first replica's
-    clusters (measured at K=4: 10 of 40 clusters non-empty, max size
-    920 vs 225) and the PAIR stage, not the assignment, grows ∝ K².
-    Under r10's corrected isometric sign-flip amplifier
-    (tools/scale_stress.py amplify_vectors_labeled — per-replica
-    workload exactly preserved, replicas separable) the dense census is
+    from i06's all-pairs baseline.  MEASURED scale tension (r10, on
+    K-fold amplified corpora): amplifying by verbatim vector copies
+    read "2.3x vs linear at K=4", but that was an AMPLIFIER ARTIFACT —
+    copies make every replica's centroids identical, so the clabel
+    tie-break funnels ALL replicas into the lexicographically-first
+    replica's clusters (measured at K=4: 10 of 40 clusters non-empty,
+    max size 920 vs 225) and the PAIR stage, not the assignment, grows
+    ∝ K².  Under an isometric sign-flip amplifier (per-replica workload
+    exactly preserved, replicas separable) the dense census is
     sublinear at this absolute scale (11.1 s at K=16 vs ANN's 10.7 s).
     The dense assignment's O(n·k) term is still real — assignment-only
     timing grows 4.3x per 4x data on the K=4->16 step (vs 2.15x for
@@ -716,166 +723,51 @@ _SEMDEDUP_CENSUS_TAIL_SQL = f"""
 """
 
 
-def _rank_top_nprobe(cand: DataFrame, nprobe: int) -> DataFrame:
-    """(code, cbucket, ham) -> the nprobe nearest buckets per code:
-    (ham, cbucket) ascending, row_number.  The ONE ranking definition
-    both routing builders share (r10 third review: a tie-break change
-    must hit both, or the dispatched forms silently diverge)."""
-    from pyspark.sql.window import Window as W
-
-    w = W.partitionBy("code").orderBy("ham", "cbucket")
-    return (cand.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= nprobe)
-            .select("code", "cbucket"))
-
-
-def srp_ball_routing(occupied: DataFrame, bits: int, nprobe: int = 3,
-                     max_radius: int = 3) -> DataFrame:
-    """(code, cbucket): every possible b-bit code mapped to its
-    ``nprobe`` Hamming-nearest buckets from the 1-column ``occupied``
-    frame (cbucket), built by BALL EXPANSION — radius r adds the
-    |occupied| × C(bits, r) pairs at distance exactly r (each pair
-    generated once, by its unique XOR mask), stopping as soon as every
-    code holds >= nprobe candidates (no unseen pair can then outrank a
-    held one: anything unseen is at distance > r).
-
-    This is the linear-in-bucket-count builder the 20-bit production
-    sizing needs — the naive ranking enumerates 2^bits × |occupied|
-    pairs, quadratic in bucket count when 2^bits ~ |occupied| (the r10
-    second-review ceiling).  The radius loop is driver-side (the i27
-    convergence idiom: per-radius accumulate, localCheckpoint to
-    truncate the union lineage, one tiny count action as the stop
-    test); masks per radius are a broadcast literal.  The loop is
-    CAPPED at ``max_radius`` (r10 third review): under clustered or
-    sparse occupancy — or whenever nprobe > |occupied| — the early
-    stop can be unreachable, and an uncapped loop would enumerate
-    C(bits, ~bits/2) driver-side masks and re-checkpoint the
-    accumulator per radius, strictly worse than the naive form it
-    replaces.  Codes still unconverged at the cap take a RESIDUAL
-    completion instead: their ball rows are dropped and they are
-    cross-ranked against all occupied buckets — identical semantics
-    (verified by the builder-equality pin across occupancy shapes),
-    cost |unconverged| × |occupied|, which only approaches the naive
-    cost in the pathological all-unconverged case where no cheaper
-    exact table exists.  Ranking is the shared ``_rank_top_nprobe``.
-    Note the equality evidence is the parametrized unit pin plus the
-    forced-ball-path assignment test — the i59 ORACLE exercises the
-    small-code-space cross-product branch (bits=3), not this builder.
-
-    MEASURED at production sizing (r11, tools/ball_routing_bench.py:
-    bits=20, nprobe=3, local[32]/24g, deterministic md5-uniform
-    occupancy — the builder sees only distinct codes, so synthetic
-    codes exercise exactly this path; every row verified rows ==
-    nprobe*2^20 full coverage and 0 brute-force argmin mismatches on
-    200 sampled codes; two runs, the reproducible-subset run first):
-    |occ|=10k r<=3 25.5 s (45.8); |occ|=100k r<=3 69.2 s (79.5);
-    |occ|=500k r<=2 398.9 s (745.9); sparse 1k at r<=4 70.7 s (27.1);
-    clustered-ball8 (forced residual completion, 2^20-256 unconverged
-    codes) 24.2 s (24.0).  Reading:
-    the HEALTHY production shapes (occupancy 1-10% of the code space,
-    which is what bits ~ log2(k/target) produces) build in under 80 s;
-    the worst measured shape is NEAR-SATURATED occupancy (500k of 2^20
-    — bits sized too small for k), where the per-radius accumulator
-    re-checkpoint dominates (~105M rows) — still orders of magnitude
-    cheaper than the naive 2^20 x 500k cross-rank, and the build is
-    n-INDEPENDENT, amortized over scoring the whole corpus.  The
-    capped-loop residual path is CHEAP (~24 s), not the hazard: the
-    cost center is ball volume x occupancy, exactly as derived.
-
-    Re-measured AFTER the r11 review fixes (entry pin below + the
-    caller's cbuck pin) with the SHIPPED builder at bits=20: 26.9 /
-    50.3 / 396.8 / 53.9 / 16.0 s across the same five shapes, all
-    full-coverage with zero argmin mismatches — the gating
-    measurements describe the code as shipped.
-
-    ``occupied`` is pinned on entry: the per-radius localCheckpoint,
-    the stop-test count, and the residual cross-rank each materialize
-    a plan containing ``occupied`` — unpinned, every one of those
-    actions would re-run its full upstream lineage (for the i59
-    caller: a full-corpus centroid aggregation per radius), which is
-    exactly the cost the n-independent claim above excludes.  The
-    bench pinned its input before timing; this makes the shipped path
-    match what was measured (r11 second review)."""
-    from itertools import combinations
-
-    spark = occupied.sparkSession
-    occupied = occupied.localCheckpoint()
-    acc = None
-    converged = False
-    for r in range(min(bits, max_radius) + 1):
-        masks = [(sum(1 << p for p in c), r)
-                 for c in combinations(range(bits), r)]
-        mdf = F.broadcast(spark.createDataFrame(masks, "mask int, ham int"))
-        layer = (occupied.crossJoin(mdf)
-                 .select(F.expr("int(cbucket ^ mask)").alias("code"),
-                         "cbucket", "ham"))
-        acc = layer if acc is None else acc.unionByName(layer)
-        acc = acc.localCheckpoint()
-        n_done = (acc.groupBy("code").count()
-                  .filter(F.col("count") >= nprobe).count())
-        if n_done == (1 << bits):
-            converged = True
-            break
-    if not converged:
-        done = (acc.groupBy("code").count()
-                .filter(F.col("count") >= nprobe).select("code"))
-        residual_codes = (
-            spark.range(1 << bits)
-            .select(F.col("id").cast("int").alias("code"))
-            .join(done, "code", "left_anti"))
-        residual = (residual_codes.crossJoin(occupied)
-                    .withColumn("ham", F.expr("bit_count(code ^ cbucket)")))
-        acc = (acc.join(residual_codes, "code", "left_anti")
-               .unionByName(residual))
-    return _rank_top_nprobe(acc, nprobe)
-
-
 def _nan_safe_acos(vec_col: str, cen_col: str):
     """Rounded cosine with the zero-norm edge pinned to -2.0 (below any
-    real cosine), so a zero-norm embedding or centroid orders IDENTICALLY
-    under the m=1 desc window and the sharded min-of-struct argmax
-    (ADVICE r12).  Under ANSI mode (Spark 4's default, and the driver's
+    real cosine), so a zero-norm embedding or centroid deterministically
+    loses the desc argmax window: its vector takes the lowest routed
+    clabel.  Under ANSI mode (Spark 4's default, and the driver's
     conf-free session) a plain division would THROW DIVIDE_BY_ZERO deep
     inside the job, so this uses try_divide (NULL on zero divisor —
-    bit-identical to ``/`` for every nonzero norm); NULL would otherwise
-    order OPPOSITE on the two paths (desc window: nulls last, lose;
-    min-of-struct: null field sorts first, win), and NaN from NaN-bearing
-    inputs the opposite way again — coalesce + nanvl pin both to -2.0 on
-    both paths, where they deterministically lose."""
+    bit-identical to ``/`` for every nonzero norm); coalesce + nanvl
+    pin that NULL, and the NaN of NaN-bearing inputs (which Spark sorts
+    GREATEST, so it would otherwise win), to the sentinel."""
     raw = F.try_divide(dot(vec_col, cen_col), norm(vec_col) * norm(cen_col))
     return (F.coalesce(F.nanvl(F.round(raw, 6), F.lit(-2.0)), F.lit(-2.0))
             .alias("acos"))
 
 
-def assign_nearest_centroid_ann(emb: DataFrame, bits: int = 3,
-                                nprobe: int = 3,
-                                ball_min_codes: int = 1025,
-                                centroid_shards: int = 1) -> DataFrame:
+# the registered i59 probe count — single-sourced so the Spark default and
+# the oracle CTE below cannot drift apart
+_I59_NPROBE = 3
+
+
+def assign_nearest_centroid_ann(emb: DataFrame,
+                                nprobe: int = _I59_NPROBE) -> DataFrame:
     """(vec_id, clabel, embedding): approximate nearest-centroid
     assignment — each vector scores only the centroids of the ``nprobe``
     buckets its SRP code routes to.
 
-    Basis = embeddings ``vec_id 1..bits`` (data-derived, deterministic —
-    i18's convention, so the oracle can reproduce it; a missing basis id
-    leaves that bit constantly 0 on BOTH engines, since NULL > 0 is
-    false-y in the CASE on each, degrading resolution, never diverging).
-    Centroids (k rows, broadcast) and vectors get the b-bit sign code;
-    a ROUTING TABLE maps every possible code to its ``nprobe`` nearest
-    OCCUPIED centroid buckets by Hamming distance (integer
+    Basis = embeddings ``vec_id 1.._SRP_BITS`` (data-derived,
+    deterministic — i18's convention, so the oracle can reproduce it; a
+    missing basis id leaves that bit constantly 0 on BOTH engines, since
+    NULL > 0 is false-y in the CASE on each, degrading resolution, never
+    diverging).  Centroids (k rows, broadcast) and vectors get the sign
+    code; a ROUTING TABLE maps every possible code to its ``nprobe``
+    nearest OCCUPIED centroid buckets by Hamming distance (integer
     bit_count(xor), exact on both engines; lowest-bucket tie-break) —
     an occupied code routes to itself first at distance 0, so one table
     subsumes the same-bucket case and the empty-bucket fallback in a
-    single code path.  Scoring is then two broadcast equi-joins (code ->
-    probed buckets -> their centroids) and the dense argmax semantics:
-    rounded cosine desc, clabel tie-break, vec_id-partitioned
-    row_number.
+    single code path.  The table is the one-shot 2^bits × |occupied|
+    cross-product ranking: at most 64 integer rows, independent of n
+    and k.  Scoring is then two broadcast equi-joins (code -> probed
+    buckets -> their centroids) and the dense argmax semantics: rounded
+    cosine desc, clabel tie-break, vec_id-partitioned row_number.
 
     Scale story (the fix for the dense assignment's O(n·k) term —
-    measured 4.3× per 4× data on the K=4→16 assignment-only step):
-    with k ∝ corpus and bits ≈ log2(k / target-per-bucket), each vector
-    scores ~nprobe·target centroids and the routing table costs
-    2^bits × |occupied| integer ops — INDEPENDENT of n — so total
-    assignment is O(n·nprobe·target + k²/target).  Two measured
+    measured 4.3× per 4× data on the K=4→16 assignment-only step): each
+    vector scores only the probed buckets' centroids.  Two measured
     dead-ends shaped this design (r10 staging): a DENSE fallback for
     centroid-less-bucket vectors re-grew an O(n·k) term (orphan share
     36-46%, not a corner), and SINGLE-probe routing under sparse
@@ -884,109 +776,58 @@ def assign_nearest_centroid_ann(emb: DataFrame, bits: int = 3,
     nprobe is i29's recall knob doing double duty as the BALANCE knob:
     more probed buckets per code spreads borderline vectors toward
     their true nearest centroid.  Join sizing (r11 second review —
-    both hints are DELIBERATE, with measured justification): the
-    ROUTING table broadcast is bounded by nprobe x 2^bits two-int
-    rows (~25 MB at the 20-bit production sizing), independent of
-    both n and k.  The CENTROID table broadcast is bounded by k x dim
-    — the designer's cluster budget — and is FORCED because Spark
-    cannot estimate a post-aggregate dimension table's size: hint-free,
-    the static planner picks a sort-merge join that shuffle-writes the
-    ENTIRE n-row vector side onto the <=2^bits-cardinality bucket key
-    (AQE's runtime broadcast conversion still pays the map-side write,
-    and if k ever genuinely exceeded the broadcast budget the fallback
-    would be that same low-cardinality skewed shuffle — strictly worse
-    than either broadcast form).  Measured: the hint-free form
-    worsened the K=16 stress ratio from ~0.19x to 0.32x vs linear.
-    If k x dim outgrows the broadcast budget (k in the tens of
-    millions or very wide dims), the remedy is probe SHARDING —
-    EXECUTABLE here via ``centroid_shards=m`` (r12, closing VERDICT
-    r11 item 4): the centroid table splits into m hash-disjoint
-    broadcast-sized shards (deterministic xxhash64(clabel) split,
-    ~k/m rows each), each shard scores its candidates in its own
-    broadcast equi-join branch, and ONE vec_id-keyed min-of-struct
-    aggregate over the union replaces the argmax window (SortAggregate
-    physically: the struct carries the embedding array, which is not a
-    mutable fixed-width buffer — the partial still runs map-side) —
-    partial aggregation reduces each branch map-side to one
-    candidate per (vec_id, partition) before the exchange, so the
-    shuffle carries ~n·m best-so-far rows, never the full candidate
-    set, and never a skewed bucket-keyed sort-merge.  min over
-    struct(-acos, clabel) is the window's exact (rounded-cosine
-    desc, clabel asc) semantics — shard-count invariance m=1..7 is
-    pinned on constructed frames.  Zero-norm embeddings (NaN cosine,
-    which Spark sorts GREATEST — it would win the desc window but lose
-    the min-struct) are normalized to a -2.0 sentinel by
-    ``_nan_safe_acos`` on BOTH paths, so they deterministically lose
-    everywhere and shard invariance holds even out of contract
-    (ADVICE r12).  Zero-norm stays OUT of the differential contract
-    deliberately: ``valid_embeddings``/``_valid_emb_sql`` require
-    non-NULL, non-empty arrays with every ELEMENT valid (non-NULL,
-    non-NaN, |x| < 1e12 as of the r14 probes) — an all-zeros vector
-    passes every element test, so a zero-norm vector still flows
+    both hints are DELIBERATE): the ROUTING table broadcast is bounded
+    by nprobe x 2^bits two-int rows.  The CENTROID table broadcast is
+    bounded by k x dim — the designer's cluster budget — and is FORCED
+    because Spark cannot estimate a post-aggregate dimension table's
+    size: hint-free, the static planner picks a sort-merge join that
+    shuffle-writes the ENTIRE n-row vector side onto the
+    <=2^bits-cardinality bucket key (AQE's runtime broadcast conversion
+    still pays the map-side write).  Measured: the hint-free form
+    worsened the amplified K=16 run from ~0.19x to 0.32x vs linear.
+
+    Zero-norm embeddings (NaN cosine) are normalized to a -2.0 sentinel
+    by ``_nan_safe_acos``, so they deterministically lose and take the
+    lowest routed clabel.  Zero-norm stays OUT of the differential
+    contract deliberately: ``valid_embeddings``/``_valid_emb_sql``
+    require non-NULL, non-empty arrays with every ELEMENT valid
+    (non-NULL, non-NaN, |x| < 1e12 as of the r14 probes) — an all-zeros
+    vector passes every element test, so a zero-norm vector still flows
     through the filter into DuckDB's list_cosine_similarity, which
-    errors/NaNs on a
-    zero divisor — the oracle cannot express the lenient semantics, the
-    same class as the r12/r13 NULL-element findings (ADVICE r13: the
-    earlier wording here claimed the oracle "never sees" them, which is
-    exactly backwards).  The Spark-side sentinel is therefore a strict
-    SUPERSET of the contract — defensive determinism for corpora the
-    oracle could not even score, not a parity surface; extending the
-    contract itself was rejected because a norm>0 predicate is
+    errors/NaNs on a zero divisor — the oracle cannot express the
+    lenient semantics, the same class as the r12/r13 NULL-element
+    findings.  The Spark-side sentinel is therefore a strict SUPERSET
+    of the contract — defensive determinism for corpora the oracle
+    could not even score, not a parity surface; extending the contract
+    itself was rejected because a norm>0 predicate is
     float-underflow-sensitive (FLOAT[] x*x can flush to zero on one
     engine and not the other), which would make the validity filter
-    itself a divergence source.  The
-    vector side is re-mapped once per shard (n·m map work, no pin —
-    the documented trade for keeping every join broadcast-shaped at
-    any k); the registered i59 path keeps the default m=1 window
-    form.
-    The routing table builder DISPATCHES on code-space size (the two
-    forms are pinned equal in tests): at <= 2^10 codes the one-shot
-    cross-product ranking is cheapest (a few thousand integer rows, no
-    extra jobs); beyond that — the 20-bit production sizing, where the
-    cross-product is quadratic in bucket count (the r10 second-review
-    ceiling) — ``srp_ball_routing`` expands Hamming balls
-    radius-by-radius, |occupied| × C(bits, <=r) rows, linear in bucket
-    count, at the price of a bounded driver loop with per-radius
-    actions (measured ~4 s of fixed overhead at fixture scale — which
-    is why small code spaces take the one-shot form)."""
+    itself a divergence source."""
     from pyspark.sql.window import Window as W
 
     cenarr = _centroid_table(emb)
-    basis = F.broadcast(srp_basis(emb, bits))
+    basis = F.broadcast(srp_basis(emb))
     cbuck = (cenarr.crossJoin(basis)
-             .select("clabel", "carr",
-                     srp_code("carr", bits).alias("cbucket")))
-    # Pin the centroid lineage ONCE, up front, unconditionally (r22;
-    # widens the r11 loop-pin rule): every path reads cbuck through at
-    # least TWO independent broadcast subtrees — the routing build's
-    # `occupied` and the scoring join's centroid table — and broadcast
-    # subtrees never share work (no ReuseExchange across them), so even
-    # the m=1 one-shot path was re-running the full-corpus centroid
-    # aggregation twice inside its "single" action (r21's comment here
-    # claimed one lineage — measured this round: assignment 1.88 s ->
-    # 1.45 s median-of-5 with the pin).  The pinned payload is k rows
-    # (the designer's cluster budget, broadcast-sized by contract), so
-    # the pin costs O(k) at any corpus scale and saves a full corpus
-    # pass under the second broadcast.
+             .select("clabel", "carr", srp_code("carr").alias("cbucket")))
+    # Pin the centroid lineage ONCE, up front (r22): cbuck is read through
+    # TWO independent broadcast subtrees — the routing build's `occupied`
+    # and the scoring join's centroid table — and broadcast subtrees never
+    # share work (no ReuseExchange across them), so the unpinned plan
+    # re-ran the full-corpus centroid aggregation twice inside its one
+    # action (measured: assignment 1.88 s -> 1.45 s median-of-5 with the
+    # pin).  The pinned payload is k rows (the designer's cluster budget,
+    # broadcast-sized by contract), so the pin costs O(k) at any corpus
+    # scale and saves a full corpus pass under the second broadcast.
     cbuck = cbuck.localCheckpoint()
-    # ball_min_codes: the dispatch threshold, a keyword so tests can
-    # force the ball path end-to-end (pass 0) without duplicating the
-    # ranking logic they compare against
-    if (1 << bits) < ball_min_codes:
-        occupied = cbuck.select("cbucket").distinct()
-        codes = (emb.sparkSession.range(1 << bits)
-                 .select(F.col("id").cast("int").alias("code")))
-        routing = _rank_top_nprobe(
-            codes.crossJoin(F.broadcast(occupied))
-            .withColumn("ham", F.expr("bit_count(code ^ cbucket)")),
-            nprobe)
-    else:
-        # occupied derives from the ALREADY-pinned frame (the up-front
-        # pin covers this branch): srp_ball_routing's per-radius pins,
-        # stop-test counts, and the scoring join's cbuck subtree all
-        # read the one materialization (r11 third review)
-        occupied = cbuck.select("cbucket").distinct()
-        routing = srp_ball_routing(occupied, bits, nprobe)
+    occupied = cbuck.select("cbucket").distinct()
+    codes = (emb.sparkSession.range(1 << _SRP_BITS)
+             .select(F.col("id").cast("int").alias("code")))
+    nearest = W.partitionBy("code").orderBy("ham", "cbucket")
+    routing = (codes.crossJoin(F.broadcast(occupied))
+               .withColumn("ham", F.expr("bit_count(code ^ cbucket)"))
+               .withColumn("rn", F.row_number().over(nearest))
+               .filter(F.col("rn") <= nprobe)
+               .select("code", "cbucket"))
     # assignment needs only a VALID embedding; NULL/empty embeddings
     # are out of contract on both engines (r12 null sweep + r13
     # empty-array probe — the oracle's list_inner_product ERRORS on a
@@ -994,50 +835,17 @@ def assign_nearest_centroid_ann(emb: DataFrame, bits: int = 3,
     # a lenient form)
     vbuck = (valid_embeddings(emb)
              .crossJoin(basis)
-             .select("vec_id", "embedding",
-                     srp_code("embedding", bits).alias("code")))
-    routed = vbuck.join(F.broadcast(routing), "code")
-    if centroid_shards <= 1:
-        w = W.partitionBy("vec_id").orderBy(F.desc("acos"), "clabel")
-        return (
-            routed
-            .join(F.broadcast(cbuck), "cbucket")
-            .select("vec_id", "clabel", "embedding",
-                    _nan_safe_acos("embedding", "carr"))
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("vec_id", "clabel", "embedding"))
-    # probe sharding (see the docstring's broadcast-budget paragraph);
-    # cbuck was pinned up front, so the m filtered broadcast branches
-    # all read the one materialization
-    shard = F.pmod(F.xxhash64("clabel"), F.lit(centroid_shards))
-    sharded = cbuck.withColumn("shard", shard)
-    scored = None
-    for s in range(centroid_shards):
-        part = F.broadcast(sharded.filter(F.col("shard") == s)
-                           .select("cbucket", "clabel", "carr"))
-        layer = (routed.join(part, "cbucket")
-                 .select("vec_id", "embedding", "clabel",
-                         _nan_safe_acos("embedding", "carr")))
-        scored = layer if scored is None else scored.unionByName(layer)
-    best = scored.groupBy("vec_id").agg(
-        F.min(F.struct((-F.col("acos")).alias("nacos"),
-                       F.col("clabel").alias("clabel"),
-                       F.col("embedding").alias("embedding"))).alias("b"))
-    return best.select("vec_id", F.col("b.clabel").alias("clabel"),
-                       F.col("b.embedding").alias("embedding"))
+             .select("vec_id", "embedding", srp_code("embedding").alias("code")))
+    w = W.partitionBy("vec_id").orderBy(F.desc("acos"), "clabel")
+    return (
+        vbuck.join(F.broadcast(routing), "code")
+        .join(F.broadcast(cbuck), "cbucket")
+        .select("vec_id", "clabel", "embedding",
+                _nan_safe_acos("embedding", "carr"))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select("vec_id", "clabel", "embedding"))
 
-
-# the registered i59 sizing — single-sourced so the Spark call and the
-# oracle CTE below cannot drift apart (ADVICE r11: a future caller
-# passing a non-default bits would otherwise silently diverge from the
-# differential).  The CTE interpolates these where it can (code-space
-# range, probe count); its three-basis-vector CASE block and the 4/2/1
-# bit weights are STRUCTURALLY bits=3, which the assert right below the
-# string guards — changing the constant without rewriting the CTE fails
-# at import, not as a hash mismatch.
-_I59_BITS = 3
-_I59_NPROBE = 3
 
 # oracle twin of assign_nearest_centroid_ann at the i59 sizing; expects
 # cenarr in scope (_CENTROID_CTES_SQL) and binds
@@ -1064,7 +872,7 @@ _ANN_ASSIGNED_CTES_SQL = f"""
             SELECT code, cbucket FROM (
                 SELECT c.code, b.cbucket,
                        bit_count(xor(c.code, b.cbucket)) AS ham
-                FROM (SELECT CAST(unnest(range(0, {1 << _I59_BITS}))
+                FROM (SELECT CAST(unnest(range(0, {1 << _SRP_BITS}))
                                   AS INT) AS code) c
                 CROSS JOIN (SELECT DISTINCT cbucket FROM cbuck) b
             )
@@ -1093,32 +901,14 @@ _ANN_ASSIGNED_CTES_SQL = f"""
         )
 """
 
-# the CTE's basis/weights block is structurally three-bit (see the
-# constant's comment): rewriting it is part of changing _I59_BITS.
-# A raise, not an assert — asserts vanish under python -O, and this
-# guard exists precisely to fail at import instead of as an
-# inscrutable differential hash mismatch (this round's review)
-if _I59_BITS != 3:
-    raise ImportError("rewrite _ANN_ASSIGNED_CTES_SQL's basis block "
-                      "before changing _I59_BITS")
-
-
-def semdedup_census_ann(emb: DataFrame, tau: float = _SEMDEDUP_TAU,
-                        bits: int = _I59_BITS, nprobe: int = _I59_NPROBE,
-                        centroid_shards: int = 1) -> DataFrame:
-    """The i59 kernel: ``semdedup_census`` with the dense
-    assignment swapped for the SRP-bucketed one — the pair stage, the
-    keep-first rule, the census rollup, and the localCheckpoint pin are
-    all the SHARED code path, so the only semantic difference between
-    the dense form and i59 is which centroid a borderline vector lands
-    on.  Defaults are the registered i59 sizing constants; callers at
-    other sizings (the scale-stress log-K growth, probe-sharded runs)
-    must supply their own oracle."""
-    return semdedup_census(
-        emb, tau=tau,
-        assign=lambda e: assign_nearest_centroid_ann(
-            e, bits=bits, nprobe=nprobe, centroid_shards=centroid_shards))
-
+# the CTE's basis/weights block (and i18's) is structurally three-bit
+# (see the constant's comment): rewriting them is part of changing
+# _SRP_BITS.  A raise, not an assert — asserts vanish under python -O,
+# and this guard exists precisely to fail at import instead of as an
+# inscrutable differential hash mismatch
+if _SRP_BITS != 3:
+    raise ImportError("rewrite the i18 oracle and _ANN_ASSIGNED_CTES_SQL's "
+                      "basis blocks before changing _SRP_BITS")
 
 
 @query(
@@ -1130,25 +920,18 @@ def semdedup_census_ann(emb: DataFrame, tau: float = _SEMDEDUP_TAU,
 )
 def i59_semdedup_census_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup census with SRP-bucketed (approximate) centroid
-    assignment — the 100 TB form of the dense SemDeDup baseline
-    (VERDICT r9 item 2; REGISTERED round 11 after the 20-bit routing
-    measurement VERDICT r10 item 3 demanded — see srp_ball_routing),
-    removing
-    the dense assignment's O(n·k) term (measured emergent, not yet
-    dominant, at fixture scale — see the module docstring for the
-    corrected r9-vs-r10 record).  Stress row
-    ``semdedup-ann[i59-kernel]``, final nprobe=3 routing design:
-    0.21× vs linear at K=16 under the honest k ∝ corpus model, with
-    cluster balance within 3% of dense (single-probe had funneled half
-    the corpus into one cluster).  Same cluster-bucketed pair stage and
-    keep-first census; only the assignment is approximate (see
-    assign_nearest_centroid_ann).  The dense exact form remains available as
-    ``semdedup_census`` with the default assigner (the retired staged
-    i58 wrapped exactly that), mirroring the registry's i06 (exact
-    pairs) <-> i18 (SRP buckets) relationship."""
+    assignment: ``semdedup_census`` with the dense assignment swapped for
+    ``assign_nearest_centroid_ann``.  The pair stage, the keep-first
+    rule, the census rollup and the assignment pin are the SHARED code
+    path, so the only semantic difference from the dense form is which
+    centroid a borderline vector lands on.  Routing removes the dense
+    assignment's O(n·k) scoring term (measured emergent, not yet
+    dominant, at fixture scale — see semdedup_census).  The dense exact
+    form remains available as ``semdedup_census`` with the default
+    assigner, mirroring the registry's i06 (exact pairs) <-> i18 (SRP
+    buckets) relationship."""
     emb = widen_if_narrow(load_table(spark, sf_dir, "embeddings"))
-    return semdedup_census_ann(emb)
-
+    return semdedup_census(emb, assign=assign_nearest_centroid_ann)
 
 
 # ---- i67: RRF hybrid retrieval fusion (registered round 16, pulled

@@ -409,9 +409,8 @@ def k18_audio_silence_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def audio_segments_frame(binary: DataFrame) -> DataFrame:
     """The k18 kernel over any (doc_id, payload binary) frame — factored
-    out (the i65/i64 convention) so crafted-frame tests and
-    tools/scale_stress.py drive the exact registered formulation; callers
-    pre-filter NULL payloads."""
+    out (the i65/i64 convention) so crafted-frame tests drive the exact
+    registered formulation; callers pre-filter NULL payloads."""
     import numpy as np
     from pyspark.sql.window import Window
 
@@ -572,27 +571,18 @@ def k17_phash_band_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return phash_band_pairs(codes)
 
 
-def phash_band_pairs(codes: DataFrame,
-                     shard_cols: tuple[str, ...] = ()) -> DataFrame:
-    """The k17 banding kernel over any (doc_id, phash) frame — factored
-    out (the i65/i64/i66 convention) so tools/scale_stress.py drives the
-    registered formulation.  ``shard_cols`` extend the band key for the
-    stress harness's replica-disjoint amplification (the i18 keep_rep
-    precedent: folding the replica id into the join key models the
-    production hash space growing with the corpus — an 8-bit toy code
-    over an ever-larger corpus would instead measure the CONTRACTUAL
-    quadratic growth of pair enumeration inside giant code-collision
-    groups, not the algorithm).  Callers pin ``codes``: both join sides
-    consume it."""
+def phash_band_pairs(codes: DataFrame) -> DataFrame:
+    """The banding kernel of k17 (its caller) over any (doc_id, phash)
+    frame.  Callers pin ``codes``: both join sides consume it."""
     bands = codes.selectExpr(
-        *shard_cols, "doc_id", "phash",
+        "doc_id", "phash",
         "stack(2, 0, phash div 16, 1, pmod(phash, 16)) AS (band, bval)")
-    a = bands.select(*shard_cols, F.col("doc_id").alias("da"),
+    a = bands.select(F.col("doc_id").alias("da"),
                      F.col("phash").alias("pa"), "band", "bval")
-    b = bands.select(*shard_cols, F.col("doc_id").alias("db"),
+    b = bands.select(F.col("doc_id").alias("db"),
                      F.col("phash").alias("pb"), "band", "bval")
     return (
-        a.join(b, ["band", "bval", *shard_cols])
+        a.join(b, ["band", "bval"])
         .filter(F.col("da") < F.col("db"))
         .select("da", "db",
                 F.expr("CAST(bit_count(pa ^ pb) AS LONG)").alias("hamming"))

@@ -577,9 +577,9 @@ def e10_sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def sessionize(ev: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    """The e10 kernel over any (user_id, ts, event_id, ...) frame —
-    factored out so tools/scale_stress.py can amplify it.  One user_id
-    window shuffle; the session agg reuses the window's partitioning.
+    """The e10 kernel over any (user_id, ts, event_id, ...) frame.  One
+    user_id window shuffle; the session agg reuses the window's
+    partitioning.
     Un-timestamped events are excluded by contract on both engines (r13
     null-ts probe): a gap to an event with no time is undefined, and the
     engines' opposite NULL-ordering defaults would otherwise place such
@@ -908,7 +908,7 @@ def e18_cumulative_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def funnel_census(ev: DataFrame) -> DataFrame:
     """The e19 kernel over any (user_id, ts, event_id, event_type) frame —
     factored out so constructed-frame tests can drive the empty-funnel
-    edge (nullif ratio) and future stress runs can amplify it.
+    edge (nullif ratio).
 
     ONE user-keyed shuffle: per-user sorted event arrays folded
     left-to-right through a (stage, last_ts) state machine — the i25

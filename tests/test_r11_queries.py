@@ -1,12 +1,8 @@
 """i59 semdedup-ANN (registered round 11 — graduated from the r10
 staging module): hand-computed routing/nprobe pins, pseudo-random sweeps
 of the SRP-routed assignment against a pure-Python reference of the SAME
-approximate algorithm, census invariants + unpinned-assignment plan
-lints, and the ball-expansion routing builder's equality matrix against
-the naive ranking (including the capped-radius residual path).  The
-20-bit production-sizing measurement lives in
-tools/ball_routing_bench.py (recorded in the srp_ball_routing
-docstring)."""
+approximate algorithm, and census invariants + unpinned-assignment plan
+lints."""
 
 from __future__ import annotations
 
@@ -159,61 +155,3 @@ def test_i59_census_totals_and_plan(spark, sf_dir):
     assert "BroadcastHashJoin" in aplan
     assert "CartesianProduct" not in aplan
     assert not unpartitioned_window_nodes(assigned)
-
-
-@pytest.mark.parametrize("bits,occ", [
-    (3, [0]), (3, [5]), (3, [0, 7]), (3, [1, 2, 4]),
-    (3, [0, 3, 5, 6]), (3, list(range(8))),
-    # bits=7 legs exercise the max_radius CAP + residual completion
-    # (r10 third review): clustered occupancy leaves far codes
-    # unconverged at radius 3, and the single-bucket case can never
-    # reach nprobe candidates at all
-    (7, [0, 1, 2, 3]), (7, [0, 85, 102, 127]), (7, [64]),
-])
-def test_ball_routing_equals_naive_ranking(spark, bits, occ):
-    # the builder-equality pin: ball expansion (+ capped-radius residual
-    # completion) must produce the EXACT table the naive 2^bits x
-    # occupied ranking produces, across occupancy shapes from a single
-    # bucket (early stop unreachable -> pure residual) to full
-    # occupancy (converges at radius 1: radius 0 holds one candidate
-    # per code, < nprobe)
-    from pyspark.sql import functions as F
-
-    from csv_to_parquet_aws_datalake_spark.operators.llm_vectors import (
-        _rank_top_nprobe,
-        srp_ball_routing,
-    )
-
-    nprobe = 3
-    occupied = spark.createDataFrame([(b,) for b in occ], "cbucket int")
-    got = {(r["code"], r["cbucket"])
-           for r in srp_ball_routing(occupied, bits, nprobe).collect()}
-    codes = spark.range(1 << bits).select(F.col("id").cast("int").alias("code"))
-    want = {(r["code"], r["cbucket"]) for r in _rank_top_nprobe(
-        codes.crossJoin(occupied)
-        .withColumn("ham", F.expr("bit_count(code ^ cbucket)")),
-        nprobe).collect()}
-    assert got == want
-    # coverage: every code routes to min(nprobe, |occ|) buckets
-    per_code = {}
-    for c, b in got:
-        per_code[c] = per_code.get(c, 0) + 1
-    assert set(per_code) == set(range(1 << bits))
-    assert all(v == min(nprobe, len(occ)) for v in per_code.values())
-
-
-def test_assignment_identical_through_ball_path(spark, sf_dir):
-    # end-to-end pin through the OTHER dispatch branch: forcing the
-    # ball builder (ball_min_codes=0) must reproduce the default
-    # (cross-product) assignment exactly on the fixture embeddings —
-    # the two routing builders are interchangeable inside the kernel,
-    # not just equal in isolation
-    from csv_to_parquet_aws_datalake_spark.loader import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    default = {(r["vec_id"], r["clabel"])
-               for r in assign_nearest_centroid_ann(emb).collect()}
-    forced = {(r["vec_id"], r["clabel"])
-              for r in assign_nearest_centroid_ann(
-                  emb, ball_min_codes=0).collect()}
-    assert default == forced and default

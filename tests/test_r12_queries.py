@@ -36,83 +36,44 @@ def test_i56_rules_partition_the_corpus(spark, sf_dir):
             r["n_pass"] / r["n_docs"], abs=1e-6)
 
 
-def test_ann_assignment_shard_count_invariance(spark):
-    # probe sharding (assign_nearest_centroid_ann's centroid_shards,
-    # r12 — the executable form of the k·dim broadcast-budget remedy)
-    # must be a pure physical rewrite: the min-of-struct(-acos, clabel)
-    # aggregate has to reproduce the m=1 window's (rounded-cosine desc,
-    # clabel asc) argmax exactly, for any shard count, on BOTH dispatch
-    # paths.  The frame makes ties load-bearing: v6/v7 are equidistant
-    # from centroids cA and cZ (same rounded cosine), so the clabel
-    # tie-break decides — a shard split that separates cA from cZ must
-    # still pick the lexicographically-lower label.
+def test_ann_assignment_ties_and_zero_norm(spark):
+    # absolute labels, derived by hand.  Basis = v1..v3 (the first three
+    # axes).  Centroids: cA = mean(v1,v2,v5,v7) = [.25,.25,-.25,.5]
+    # (code 110=6), cZ = mean(v3,v4,v6,v8) = [0,0,.25,.25] (code 001=1).
+    # Two occupied buckets and nprobe=3, so every vector scores both
+    # centroids and the rounded-cosine argmax decides; the clabel
+    # tie-break decides only on an exact tie.
     from csv_to_parquet_aws_datalake_spark.operators.llm_vectors import (
         assign_nearest_centroid_ann,
     )
 
     rows = [
-        (1, "cA", [1.0, 0.0, 0.0, 0.0]),
-        (2, "cA", [0.0, 1.0, 0.0, 0.0]),
-        (3, "cZ", [0.0, 0.0, 1.0, 0.0]),
-        (4, "cZ", [-1.0, -1.0, -1.0, 1.0]),
-        (5, "cA", [1.0, 1.0, 0.0, 0.0]),
-        # tie rows: symmetric between the two centroid means
-        (6, "cZ", [1.0, 1.0, 1.0, 0.0]),
-        (7, "cA", [-1.0, -1.0, -1.0, 2.0]),
-        # zero-norm row: every cosine is NaN, which Spark sorts GREATEST
-        # — raw, it would WIN the m=1 desc window but LOSE the sharded
-        # min-of-struct.  _nan_safe_acos pins NaN to -2.0 on BOTH paths
-        # (ADVICE r12), so this row must take the lowest routed clabel
-        # under every shard count rather than breaking the invariance.
+        (1, "cA", [1.0, 0.0, 0.0, 0.0]),     # cA .377964 vs cZ 0
+        (2, "cA", [0.0, 1.0, 0.0, 0.0]),     # cA .377964 vs cZ 0
+        (3, "cZ", [0.0, 0.0, 1.0, 0.0]),     # cA -.377964 vs cZ .707107
+        (4, "cZ", [-1.0, -1.0, -1.0, 1.0]),  # cA .188982 vs cZ 0
+        (5, "cA", [1.0, 1.0, 0.0, 0.0]),     # cA .534522 vs cZ 0
+        (6, "cZ", [1.0, 1.0, 1.0, 0.0]),     # cA .218218 vs cZ .408248
+        (7, "cA", [-1.0, -1.0, -1.0, 2.0]),  # cA .428571 vs cZ .267261
+        # zero norm: both cosines are 0/0.  _nan_safe_acos maps them to
+        # the -2.0 sentinel, so the tie-break picks the lower clabel
         (8, "cZ", [0.0, 0.0, 0.0, 0.0]),
+        # label-less (moves no centroid): orthogonal to both centroids,
+        # an exact 0.0 tie that the lower clabel wins
+        (9, None, [1.0, -1.0, 0.0, 0.0]),
     ]
     df = spark.createDataFrame(
         rows, "vec_id long, label string, embedding array<float>")
-    base = sorted((r["vec_id"], r["clabel"])
-                  for r in assign_nearest_centroid_ann(df).collect())
-    assert len(base) == len(rows)  # routing covers every vector
-    for m in (2, 3, 7):
-        got = sorted(
-            (r["vec_id"], r["clabel"])
-            for r in assign_nearest_centroid_ann(
-                df, centroid_shards=m).collect())
-        assert got == base, f"centroid_shards={m} diverged"
-    # the ball-routing dispatch path shares the sharded scoring tail
-    ball = sorted(
-        (r["vec_id"], r["clabel"])
-        for r in assign_nearest_centroid_ann(
-            df, ball_min_codes=0, centroid_shards=3).collect())
-    assert ball == base
-
-
-def test_ann_assignment_sharded_plan_shape(spark):
-    # the scale contract of the sharded path: every centroid join stays
-    # a broadcast (one branch per shard), the final argmax is a hash
-    # AGGREGATE with a map-side partial (never a window's sort-shuffle),
-    # and no sort-merge join sneaks in on the low-cardinality bucket key
-    from csv_to_parquet_aws_datalake_spark.operators.llm_vectors import (
-        assign_nearest_centroid_ann,
-    )
-    from csv_to_parquet_aws_datalake_spark.plans.checks import physical_plan
-
-    df = spark.createDataFrame(
-        [(i, f"c{i % 3}", [float(i % 5) - 2.0, 1.0, float(i % 7)])
-         for i in range(1, 40)],
-        "vec_id long, label string, embedding array<float>")
-    plan = physical_plan(assign_nearest_centroid_ann(df, centroid_shards=3))
-    assert plan.count("BroadcastHashJoin") >= 6  # routing+centroids ×3
-    assert "SortMergeJoin" not in plan
-    # map-side per-shard argmax: a partial min BEFORE the vec_id
-    # exchange (SortAggregate, not HashAggregate — the struct carries
-    # the embedding array, which is not a mutable fixed-width buffer;
-    # the partial still runs map-side, which is the scale property)
-    assert "partial_min" in plan
-    # the m=1 argmax window over (acos, clabel) must be GONE from the
-    # scoring tail; the only remaining windows are the routing builder's
-    # bounded code-key rankings (<= 2^bits rows), which never see acos
-    for line in plan.splitlines():
-        if "Window" in line:
-            assert "acos" not in line, line
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        # under ANSI a plain 0/0 cosine would raise DIVIDE_BY_ZERO here
+        got = {r["vec_id"]: r["clabel"]
+               for r in assign_nearest_centroid_ann(df).collect()}
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert got == {1: "cA", 2: "cA", 3: "cZ", 4: "cA", 5: "cA",
+                   6: "cZ", 7: "cA", 8: "cA", 9: "cA"}
 
 
 def test_i56_is_map_side_single_rollup(spark, sf_dir):

@@ -63,9 +63,8 @@ def profile_query(spark, tracer, name: str, q, sf_dir: str) -> tuple[dict, tuple
     cold_compiles = compiles() - c0
     # warm = min of two runs: 190+ queries share one long-lived context,
     # and accumulated shuffle/GC state can tax a single shot 3-5x (i06
-    # measured 14 s mid-sweep vs 2.7 s isolated — same lesson as
-    # scale_stress's per-K fresh-context fix, paid here with one extra run
-    # instead of 193 session restarts)
+    # measured 14 s mid-sweep vs 2.7 s isolated), paid with one extra run
+    # instead of 193 session restarts
     runs = []
     for i in range(2):
         label = f"{name}/{{}}/{i}".format
