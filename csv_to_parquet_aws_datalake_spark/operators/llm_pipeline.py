@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.text import ngrams, tokens
 from ..loader import load_table, scan_split_estimate
 from ..registry import query
 
@@ -213,8 +214,7 @@ def packing_bins(d: DataFrame, bin_tokens: int = 512) -> DataFrame:
     bin_tokens)`` within its language shard, docs in doc_id order.
     Shared by i39 (the packing itself) and i53 (its efficiency census) so
     the census can never silently describe a packing that no longer
-    exists (review r7 finding; same convention as dup_gram_positions for
-    i48/i54 and _SHINGLES_SPARK for i03/i04).
+    exists (the same convention as dup_gram_positions for i48/i54).
 
     Packing is per-shard ON PURPOSE: the window partitions by ``lang``,
     so the cumulative sum runs independently per shard after one hash
@@ -222,7 +222,7 @@ def packing_bins(d: DataFrame, bin_tokens: int = 512) -> DataFrame:
     aggregate — one exchange total.  A global (unkeyed) running sum
     would force a 1-task sort, the exact anti-pattern the window linter
     rejects; training pipelines only need intra-shard sequential
-    placement.  Honest 100 TB caveat (r10 bounded-key-window audit):
+    placement.  Honest 100 TB caveat:
     ``lang`` is dimension-bounded (~5 values), so each per-lang
     partition is still corpus/5 rows in one sort task at full scale —
     a production packing run shards FINER ((lang, sub-shard) with
@@ -233,7 +233,7 @@ def packing_bins(d: DataFrame, bin_tokens: int = 512) -> DataFrame:
     because the oracle must agree on bin identity.
     """
     toks = d.select(
-        "lang", "doc_id", F.size(F.split("text", " ")).alias("n_toks"))
+        "lang", "doc_id", F.size(tokens()).alias("n_toks"))
     w = (
         Window.partitionBy("lang").orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -514,7 +514,7 @@ def i50_domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     src = d.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size(F.split("text", " "))).alias("n_toks"),
+        F.sum(F.size(tokens())).alias("n_toks"),
     ).localCheckpoint()  # reused 4x (totals + output): pin the corpus scan
     tot = src.agg(F.sum("n_toks").cast("double").alias("tot"))
     shared = src.crossJoin(F.broadcast(tot)).select(
@@ -724,7 +724,7 @@ def i66_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     overflows once tt_max * R approaches 9e14 — around R ~ 1e9-1e10
     total bigrams for a substantial target slice, NOT at R ~ 9e14 as
     this contract originally claimed.  The bound is ENFORCED, not just
-    documented (ADVICE r15): `_DSIR_WB_SQL` pre-checks both products
+    documented: `_DSIR_WB_SQL` pre-checks both products
     with overflow-free divisions and raises with the named remedy past
     it, so a non-ANSI session can never wrap silently into wrong
     scores.  Past the bound, a production run swaps the weight
@@ -740,7 +740,7 @@ def i66_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial agg collapses to one row per doc before the shuffle).  Two
     corpus passes total — the DSIR paper's own streaming shape.
     Docs with fewer than two tokens have no bigram and are excluded by
-    contract on both engines (NULL text too, the r12 convention)."""
+    contract on both engines, and so are NULL-text docs."""
     d = (load_table(spark, sf_dir, "documents")
          .filter(F.col("text").isNotNull())
          .select("doc_id", "lang", "text"))
@@ -751,16 +751,14 @@ def dsir_importance_frame(d: DataFrame) -> DataFrame:
     """The i66 kernel over any (doc_id, lang, text) frame — factored
     out (the i65/i64 convention) so property tests drive the registered
     formulation; callers pre-filter NULL text."""
-    d = (d.select("doc_id", "lang", F.split("text", " ").alias("t"))
-         .filter(F.size("t") >= 2))
-    bg = d.select(
-        "doc_id", "lang",
-        F.explode(F.expr(
-            "transform(sequence(1, size(t) - 1),"
-            " i -> md5(concat(element_at(t, i), ' ',"
-            " element_at(t, i + 1))))")).alias("h"),
-    ).selectExpr("doc_id", "lang",
-                 f"CAST({_bucket256('h', spark_side=True)} AS LONG) AS b")
+    bg = (
+        d.select("doc_id", "lang", tokens().alias("t"))
+        .select("doc_id", "lang", ngrams("t", 2).alias("g"))
+        .selectExpr("doc_id", "lang",
+                    "explode(transform(g, x -> md5(x))) AS h")
+        .selectExpr("doc_id", "lang",
+                    f"CAST({_bucket256('h', spark_side=True)} AS LONG) AS b")
+    )
     freq = bg.groupBy("b").agg(
         F.count(F.lit(1)).alias("r"),
         F.coalesce(F.sum(F.when(

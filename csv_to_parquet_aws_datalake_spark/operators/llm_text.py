@@ -50,14 +50,9 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from ..functions.text import chunks, ngrams, tokens
 from ..loader import load_table, widen_if_narrow
 from ..registry import query
-
-
-# 3-token shingles over a pre-split token array `t` — shared by i03 and i04
-# so the two dedup paths cannot silently diverge
-_SHINGLES_SPARK = ("transform(sequence(1, size(t) - 2),"
-                   " i -> concat_ws(' ', slice(t, i, 3)))")
 
 
 @query("i01_dedup_exact", oracle="SELECT DISTINCT lang, source FROM documents")
@@ -126,7 +121,7 @@ def i03_shingle_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-shingle sets.  Candidates come from an equi-join on shingle, so
     only documents sharing at least one shingle are ever compared.
 
-    r21: the scan is widened (i34/i48 precedent — the local documents
+    The scan is widened (i34/i48 precedent — the local documents
     fixture is one parquet row group, so the shingle build otherwise
     runs on a single core; no-op at corpus scale): 3.2 s -> 1.1 s warm
     at sf0.1 together with the kernel's array-count form."""
@@ -136,13 +131,13 @@ def i03_shingle_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def shingle_jaccard_pairs(d: DataFrame) -> DataFrame:
     """The i03 pipeline over an explicit (doc_id, text) frame — exported
-    (r17, the i67 precedent) so the tie/boundary pin in tests/
+    (the i67 precedent) so the tie/boundary pin in tests/
     test_units.py can drive the EXACT operators on crafted frames: the
     shingling, the distinct-set counts, and the threshold comparison
     all share their arithmetic with the oracle (the both-engines-wrong
     class), so they get a from-scratch pure-Python recomputation.
 
-    r21 shape: the pinned frame holds one row per doc with the distinct-
+    Shape: the pinned frame holds one row per doc with the distinct-
     shingle ARRAY and its size — per-doc counts are a map-side
     size(array_distinct(...)), not an explode + groupBy(doc_id) re-group
     (the i34 array-aggregation rationale), and the checkpoint pins 5 K
@@ -150,9 +145,9 @@ def shingle_jaccard_pairs(d: DataFrame) -> DataFrame:
     rows happens twice downstream (both self-join sides), but over the
     pinned arrays it is a cheap generator, not a recompute of the
     split/shingle work."""
-    docs = d.withColumn("t", F.split("text", " ")).filter(F.size("t") >= 3)
+    docs = d.withColumn("t", tokens()).filter(F.size("t") >= 3)
     base = (docs.select("doc_id",
-                        F.array_distinct(F.expr(_SHINGLES_SPARK)).alias("sha"))
+                        F.array_distinct(ngrams("t", 3)).alias("sha"))
             .withColumn("n", F.size("sha"))
             .localCheckpoint())  # reused 3x (counts + both join sides)
     counts = base.select("doc_id", "n")
@@ -316,7 +311,7 @@ def i04_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs only materialize when a band collides, unlike i03's full
     shingle-group expansion.
 
-    r21: the scan is widened (i34/i48 precedent — one-row-group local
+    The scan is widened (i34/i48 precedent — one-row-group local
     fixture, no-op at corpus scale), so the shingle + HashingTF feature
     build parallelizes into the localCheckpoint: 2.7 s -> 0.9 s warm at
     sf0.1, identical output (params and seed fixed)."""
@@ -324,9 +319,9 @@ def i04_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = widen_if_narrow(load_table(spark, sf_dir, "documents"), "doc_id")
     docs = (
-        d.withColumn("t", F.split("text", " "))
+        d.withColumn("t", tokens())
         .filter(F.size("t") >= 3)
-        .withColumn("sh", F.array_distinct(F.expr(_SHINGLES_SPARK)))
+        .withColumn("sh", F.array_distinct(ngrams("t", 3)))
         .select("doc_id", "sh")
     )
     tf = HashingTF(inputCol="sh", outputCol="features",
@@ -371,7 +366,7 @@ def token_tf_df(d: DataFrame) -> DataFrame:
     and document frequencies (the vocabulary-build aggregate); i07 adds
     the bounded top-30 TakeOrdered on the result."""
     return (
-        d.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
+        d.select("doc_id", F.explode(tokens()).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("tf"), F.countDistinct("doc_id").alias("df"))
     )
@@ -406,7 +401,7 @@ def i08_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tfidf_top_terms(d: DataFrame, top_n: int = 3) -> DataFrame:
     """The i08 kernel over any (doc_id, text, ...) frame."""
     n_docs = F.broadcast(d.agg(F.count(F.lit(1)).alias("nd")))
-    tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
+    tok = d.select("doc_id", F.explode(tokens()).alias("tok"))
     # pin tf: both the score join and the df aggregate consume it, and
     # Catalyst plans unpinned subtrees twice (column pruning makes the two
     # copies non-canonical, so ReusedExchange never fires) — without the
@@ -440,18 +435,10 @@ def tfidf_top_terms(d: DataFrame, top_n: int = 3) -> DataFrame:
     """,
 )
 def i09_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # bigrams via JVM-side array transform (Spark arrays are 0-indexed in
-    # SQL subscripts, DuckDB lists are 1-indexed — hence the offset mirror).
-    # size >= 2 guard: Spark's sequence(1, 0) DESCENDS ([1, 0]) for a
-    # single-token doc and t[1] then throws under ANSI; DuckDB's range(1,1)
-    # is simply empty, so only the Spark side needs the filter.
     d = load_table(spark, sf_dir, "documents")
     return (
-        d.withColumn("t", F.split("text", " "))
-        .filter(F.size("t") >= 2)
-        .select(F.explode(F.expr(
-            "transform(sequence(1, size(t) - 1), i -> concat(t[i-1], ' ', t[i]))"
-        )).alias("bg"))
+        d.withColumn("t", tokens())
+        .select(F.explode(ngrams("t", 2)).alias("bg"))
         .groupBy("bg")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), "bg")
@@ -530,7 +517,7 @@ def i13_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpora the lists become per-language stopwords — the plan (map-side
     array_intersect, no shuffle) is identical."""
     d = load_table(spark, sf_dir, "documents")
-    t = d.withColumn("toks", F.array_distinct(F.split("text", " ")))
+    t = d.withColumn("toks", F.array_distinct(tokens()))
     hits = {
         f"{k}_hits": F.size(F.array_intersect(
             "toks", F.array(*[F.lit(x) for x in v])))
@@ -570,7 +557,7 @@ def i14_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine-deterministic rounding (cf. e07)."""
     d = load_table(spark, sf_dir, "documents")
     return (
-        d.withColumn("toks", F.split("text", " "))
+        d.withColumn("toks", tokens())
         .withColumn("n_toks", F.size("toks"))
         .withColumn("n_uniq", F.size(F.array_distinct("toks")))
         .selectExpr(
@@ -622,7 +609,7 @@ def i20_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     return d.filter(F.col("text").isNotNull()).select(
         "doc_id",
-        F.size(F.split("text", " ")).alias("n_ws"),
+        F.size(tokens()).alias("n_ws"),
         F.expr("size(regexp_extract_all("
                "concat(text, ' v', CAST(doc_id AS STRING), '.txt'),"
                " '[a-z]+|[0-9]+|[^a-z0-9 ]', 0))").alias("n_bpe"),
@@ -680,7 +667,7 @@ def rolling_hash_frame(d: DataFrame) -> DataFrame:
     and token-value formulas are mirrored into both dialects, the
     both-engines-wrong class."""
     return (
-        d.filter(F.col("text").isNotNull()).withColumn("toks", F.split("text", " "))
+        d.filter(F.col("text").isNotNull()).withColumn("toks", tokens())
         .select(
             "doc_id",
             F.expr(
@@ -741,7 +728,7 @@ def simhash_frame(d: DataFrame) -> DataFrame:
     both-engines-wrong class), and the sign boundary (a ZERO bit-sum
     scores 0, not 1) only shows on constructed cancellations."""
     tok = (
-        d.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
+        d.select("doc_id", F.explode(tokens()).alias("tok"))
         .select("doc_id", F.md5("tok").alias("h"))
     )
     digits = _simhash_digit_exprs("h", spark_side=True)
@@ -856,28 +843,24 @@ def i25_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaces moved every token.  Locally the per-doc sort+lambda CPU is
     the heaviest map work in the i-family, and the documents scan is one
     row group — i34/i48 precedent, widen the degenerate scan so it does
-    not serialize on one core (r21: 0.74 s -> 0.42 s median noop at
-    sf0.1; a real multi-split corpus scan is untouched by the guard)."""
+    not serialize on one core (0.74 s -> 0.42 s median noop at sf0.1;
+    a real multi-split corpus scan is untouched by the guard)."""
     d = load_table(spark, sf_dir, "documents")
     # NULL-text docs must drop: the oracle's `JOIN topt` discards them
-    # (unnest of a NULL list yields no rows), and the pre-rewrite explode
-    # form did the same — without this filter the shuffle-free form would
-    # keep them with NULL metrics (fixture texts are never NULL, but the
-    # operator must not depend on that)
+    # (unnest of a NULL list yields no rows) — without this filter the
+    # shuffle-free form would keep them with NULL metrics (fixture texts
+    # are never NULL, but the operator must not depend on that)
     t = (widen_if_narrow(d.filter(F.col("text").isNotNull())
                          .select("doc_id", "text"))
-         .select("doc_id", F.split("text", " ").alias("toks")))
+         .select("doc_id", tokens().alias("toks")))
     # build the trigram array ONCE per row (Catalyst does not CSE
     # higher-order-function lambdas), then take both sizes from it —
     # mirroring the oracle's tri/tstats CTE split
-    tstats = t.selectExpr(
+    tstats = t.select(
         "doc_id",
-        "size(toks) AS n",
-        """CASE WHEN size(toks) >= 3
-                THEN transform(sequence(1, size(toks) - 2),
-                     i -> concat(toks[i-1], ' ', toks[i], ' ', toks[i+1]))
-                ELSE cast(array() AS array<string>) END AS tg""",
-        f"{top_run_count('toks')} AS top_cnt",
+        F.size("toks").alias("n"),
+        ngrams("toks", 3).alias("tg"),
+        F.expr(top_run_count("toks")).alias("top_cnt"),
     ).selectExpr(
         "doc_id", "n", "top_cnt",
         "size(tg) AS n_tri",
@@ -947,7 +930,7 @@ def i56_gopher_rule_breakdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def gopher_rule_breakdown(d: DataFrame) -> DataFrame:
     """The i56 kernel over any (source, text) frame."""
-    m = (d.select("source", F.split("text", " ").alias("toks"))
+    m = (d.select("source", tokens().alias("toks"))
          .selectExpr(
              "source",
              "size(toks) AS n",
@@ -1230,7 +1213,7 @@ def i30_zipf_token_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     total is a broadcast 1-row agg, not a driver collect."""
     d = load_table(spark, sf_dir, "documents")
     counts = (
-        d.select(F.explode(F.split("text", " ")).alias("tok"))
+        d.select(F.explode(tokens()).alias("tok"))
         .filter(F.col("tok") != "")
         .groupBy("tok").agg(F.count(F.lit(1)).alias("n"))
     )
@@ -1282,7 +1265,7 @@ def i32_token_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     toks = (
         d.select("doc_id",
-                 F.explode(F.array_distinct(F.split("text", " "))).alias("tok"))
+                 F.explode(F.array_distinct(tokens())).alias("tok"))
         .filter(F.col("tok") != "")
     )
     t1 = toks.alias("t1")
@@ -1333,7 +1316,7 @@ def i33_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream — instead of a distinct over every (doc, gram).
 
     The shared scan is widened BEFORE the eval/corpus branch split
-    (i34/i48 precedent, r21: 0.89 s -> 0.68 s median noop at sf0.1): the
+    (i34/i48 precedent; 0.89 s -> 0.68 s median noop at sf0.1): the
     documents fixture is one parquet row group, so both branches' gram
     explodes otherwise serialize on a single core.  The branch filters
     move above the widening exchange (no longer scan-pushed), which at
@@ -1342,15 +1325,8 @@ def i33_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole thing a no-op and the filters push down exactly as before."""
     d = load_table(spark, sf_dir, "documents")
     toks = (widen_if_narrow(d.select("doc_id", "source", "text"))
-            .select("doc_id", "source", F.split("text", " ").alias("t")))
-    ng = (
-        toks.filter(F.size("t") >= 5)
-        .select(
-            "doc_id", "source",
-            F.explode(F.expr(
-                "transform(sequence(0, size(t) - 5),"
-                " i -> concat_ws(' ', slice(t, i + 1, 5)))")).alias("g"))
-    )
+            .select("doc_id", "source", tokens().alias("t")))
+    ng = toks.select("doc_id", "source", F.explode(ngrams("t", 5)).alias("g"))
     bench = ng.filter(F.col("source") == "src0").select("g").distinct()
     corpus = ng.filter(F.col("source") != "src0").select("doc_id", "g")
     return (
@@ -1416,8 +1392,8 @@ def i34_minhash_banding(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs via an equi-join on (band, key) — the near-linear LSH shape
     (never all-pairs); the emitted n_sig_match (0-8 agreeing slots) is
     the integer Jaccard estimate.  At 100 TB: signatures are pure
-    map-side array aggregation per document (r21 — no shingle explode,
-    no doc_id re-group); band join cost is bounded by bucket collision
+    map-side array aggregation per document (no shingle explode, no
+    doc_id re-group); band join cost is bounded by bucket collision
     counts, the knob being (bands, rows-per-band)."""
     d = load_table(spark, sf_dir, "documents")
     # 2 md5 calls per shingle is CPU-bound; widen the degenerate one-file
@@ -1428,7 +1404,7 @@ def i34_minhash_banding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _minhash_signatures(d: DataFrame) -> DataFrame:
     """(doc_id, s0..s7) MinHash signatures — the pre-checkpoint signature
-    frame of minhash_band_pairs, factored out (ADVICE r21) so the
+    frame of minhash_band_pairs, factored out so the
     md5-once property below is pinned by a PLAN test
     (tests/test_plans.py::test_minhash_signature_md5_runs_once), not a
     comment: the checkpoint in the caller would otherwise hide this
@@ -1436,7 +1412,7 @@ def _minhash_signatures(d: DataFrame) -> DataFrame:
 
     Signature slots are min-over-shingles, and every shingle of a doc is
     already in ONE row — so the min is an ARRAY aggregation, not an
-    explode + re-group (r21, guide §2.4 "remove shuffles outright"):
+    explode + re-group (guide §2.4 "remove shuffles outright"):
     the md5 arrays are built once per row in their own projection
     (CollapseProject keeps multiply-referenced non-cheap expressions
     un-inlined, so each md5 runs exactly once per shingle), then each
@@ -1444,11 +1420,11 @@ def _minhash_signatures(d: DataFrame) -> DataFrame:
     exploded form — min over rows == min over the array — with zero
     shingle-row amplification and no doc_id hash-agg; the former
     explode+groupBy paid one 8-way min hash-agg update per shingle ROW
-    (r21 measured 0.97 s -> 0.79 s end-to-end at sf0.1)."""
-    docs = d.withColumn("t", F.split("text", " ")).filter(F.size("t") >= 3)
+    (0.97 s -> 0.79 s end-to-end at sf0.1)."""
+    docs = d.withColumn("t", tokens()).filter(F.size("t") >= 3)
     hashed = (
         docs.select("doc_id",
-                    F.array_distinct(F.expr(_SHINGLES_SPARK)).alias("sh"))
+                    F.array_distinct(ngrams("t", 3)).alias("sh"))
         .select(
             "doc_id",
             F.expr("transform(sh, s -> md5(concat('0|', s)))").alias("h0"),
@@ -1578,7 +1554,7 @@ def i40_token_rarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .windows import global_row_number
 
     d = load_table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
+    tok = d.select("doc_id", F.explode(tokens()).alias("tok"))
     vocab = global_row_number(
         tok.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt")),
         [("cnt", "desc"), "tok"], out="rar",
@@ -1620,7 +1596,7 @@ def i41_source_reputation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("docs"),
             F.round(F.avg("n_chars"), 4).alias("avg_chars"),
-            F.sum(F.size(F.split("text", " "))).alias("toks"),
+            F.sum(F.size(tokens())).alias("toks"),
         )
         .crossJoin(total)
         .select(
@@ -1655,7 +1631,7 @@ def i42_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id — both map-side combined; nothing global, so the shape is
     corpus-linear."""
     d = load_table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
+    tok = d.select("doc_id", F.explode(tokens()).alias("tok"))
     c = tok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c"))
     t = F.sum("c")
     return c.groupBy("doc_id").agg(
@@ -1696,7 +1672,7 @@ def i44_vocab_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     c = (
-        d.select(F.explode(F.split("text", " ")).alias("tok"))
+        d.select(F.explode(tokens()).alias("tok"))
         .groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
     )
     idx = global_row_number(c, [("cnt", "desc"), "tok"], out="_rn")
@@ -1704,10 +1680,10 @@ def i44_vocab_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         "tok", "cnt", (F.col("_rn") - 1).cast("long").alias("token_id"))
 
 
-# ---- span-level substring dedup (Lee et al. 2022), registered round 7 -----
-# Shared 5-gram CTE (i33's idiom: tokens -> positional grams).  DuckDB
-# list slicing t[a:b] is 1-based inclusive; Spark slice(t, a, n) is
-# 1-based with length — both produce the gram starting at 0-based pos i.
+# ---- span-level substring dedup (Lee et al. 2022) -------------------------
+# Shared 5-gram CTE, the oracle twin of ngrams(t, 5): DuckDB list slicing
+# t[a:b] is 1-based inclusive, and gram i starts at 0-based token pos i —
+# the same position posexplode gives the Spark-side gram.
 _GRAMS_CTE = """
     toks AS (
         SELECT doc_id, source, string_split(text, ' ') AS t FROM documents
@@ -1720,9 +1696,7 @@ _GRAMS_CTE = """
     )
 """
 
-# dup grams + their per-doc gaps-and-islands grouping: i48's oracle
-# formulation (was also shared by the staged i60 histogram oracle until
-# its r13 retirement — one edit point for the span formulation)
+# dup grams + their per-doc gaps-and-islands grouping (i48's oracle)
 _DUP_SPAN_HITS_CTE = """
         dup AS (SELECT g FROM grams GROUP BY g HAVING count(*) > 1),
         hits AS (
@@ -1736,14 +1710,10 @@ _DUP_SPAN_HITS_CTE = """
 
 def _spark_grams(d: DataFrame, *extra: str) -> DataFrame:
     """(doc_id, *extra, pos, g) positional 5-grams, map-side only."""
-    toks = d.select("doc_id", *extra, F.split("text", " ").alias("t"))
     return (
-        toks.filter(F.size("t") >= 5)
-        .select(
-            "doc_id", *extra,
-            F.posexplode(F.expr(
-                "transform(sequence(0, size(t) - 5),"
-                " i -> concat_ws(' ', slice(t, i + 1, 5)))")).alias("pos", "g"))
+        d.select("doc_id", *extra, tokens().alias("t"))
+        .select("doc_id", *extra,
+                F.posexplode(ngrams("t", 5)).alias("pos", "g"))
         .withColumn("pos", F.col("pos").cast("long"))
     )
 
@@ -1973,7 +1943,7 @@ def i54_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     hits = dup_gram_positions(widen_if_narrow(d.select("doc_id", "text")))
     cover = dup_token_cover(hits)
     toks = d.select("doc_id", "source",
-                    F.size(F.split("text", " ")).alias("n_toks"))
+                    F.size(tokens()).alias("n_toks"))
     per_doc = toks.join(cover, "doc_id", "left").select(
         "source", "n_toks", F.coalesce("dup_toks", F.lit(0)).alias("dup_toks"))
     return per_doc.groupBy("source").agg(
@@ -1991,13 +1961,9 @@ def _doc_lines(d: DataFrame, block: int) -> DataFrame:
     on.  This corpus has no newlines, so a "line" is the consecutive
     ``block``-token window — swapping in a real newline split changes
     only this expression, not the plan."""
-    toks = d.select("doc_id", F.split("text", " ").alias("t"))
-    return toks.select(
-        "doc_id",
-        F.posexplode(F.expr(
-            f"transform(sequence(0, (size(t) + {block - 1}) div {block} - 1),"
-            f" i -> concat_ws(' ', slice(t, i * {block} + 1, {block})))"))
-        .alias("idx", "line"))
+    return (d.select("doc_id", tokens().alias("t"))
+            .select("doc_id", F.posexplode(chunks("t", block))
+                    .alias("idx", "line")))
 
 
 @query(
@@ -2142,9 +2108,8 @@ def quality_classifier_scores(d: DataFrame) -> DataFrame:
     w = ("(locate(substring(h, 1, 1), '0123456789abcdef') - 1) * 16"
          " + (locate(substring(h, 2, 1), '0123456789abcdef') - 1) - 128")
     return (
-        d.select("doc_id",
-                 F.expr("transform(split(text, ' '), x -> md5(x))")
-                 .alias("hs"))
+        d.select("doc_id", tokens().alias("t"))
+        .selectExpr("doc_id", "transform(t, x -> md5(x)) AS hs")
         .selectExpr(
             "doc_id",
             "size(hs) AS n",
@@ -2252,7 +2217,7 @@ def bm25_scores_frame(d: DataFrame) -> DataFrame:
     keys on (query_id, doc_id).  Doc lengths pin once (i08's
     rationale: stats + join branches, one scan)."""
     spark = d.sparkSession
-    dl = (d.select("doc_id", F.size(F.split("text", " ")).alias("n"))
+    dl = (d.select("doc_id", F.size(tokens()).alias("n"))
           .localCheckpoint())  # pin: stats + join branches, one scan
     st = F.broadcast(dl.agg(F.count(F.lit(1)).alias("nd"),
                             F.avg("n").alias("avgdl")))
@@ -2260,7 +2225,7 @@ def bm25_scores_frame(d: DataFrame) -> DataFrame:
         [(q, p + 1, t) for q, ts in _BM25_QUERY_SETS
          for p, t in enumerate(ts)],
         "query_id string, pos int, tok string"))
-    tf = (d.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
+    tf = (d.select("doc_id", F.explode(tokens()).alias("tok"))
           .filter(F.col("tok").isin(*_BM25_ALL_TERMS))
           .groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c")))
     dfq = F.broadcast(tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df")))
@@ -2420,25 +2385,24 @@ def lsh_calibration_frame(d: DataFrame) -> DataFrame:
     (the i65/i64 convention) so crafted-frame tests drive the exact
     registered formulation.
 
-    r21 restructure (guide §2.3 "shuffle fewer bytes" / §3.2 "reduce the
-    big side before shuffling"): the exact-Jaccard side only matters for
-    the LSH CANDIDATE pairs, but the former shape computed shared-shingle
-    counts for EVERY doc pair sharing any shingle — at sf0.1 that was a
-    1.27M-row shingle self-join feeding 1.13M (da, db) groups, of which
-    the calibration join then kept 759 (a 1500x overcompute), and the
-    corpus-wide self-join on the shingle key is quadratic in hot-shingle
-    frequency (the exact blowup the banding exists to avoid).  Now the
-    candidate doc ids (bounded by the banding collision count, the
+    Shape (guide §2.3 "shuffle fewer bytes" / §3.2 "reduce the big side
+    before shuffling"): the exact-Jaccard side only matters for the LSH
+    CANDIDATE pairs; shared-shingle counts for EVERY doc pair sharing any
+    shingle would be, at sf0.1, a 1.27M-row shingle self-join feeding
+    1.13M (da, db) groups, of which the calibration join keeps 759 (a
+    1500x overcompute), and the corpus-wide self-join on the shingle key
+    is quadratic in hot-shingle frequency (the exact blowup the banding
+    exists to avoid).  So the candidate doc ids (bounded by the banding collision count, the
     quantity LSH keeps sublinear by design) are semi-joined into the
     corpus FIRST, so the shingle explode, the per-doc counts, and the
     pairwise-intersection self-join all run over candidate docs only.
-    Per-doc shingle counts come from a map-side size(array_distinct(...))
-    — the former explode + groupBy(doc_id) re-group is gone entirely
-    (same r21 rationale as i34's array-min signatures)."""
+    Per-doc shingle counts come from a map-side size(array_distinct(...)),
+    not an explode + groupBy(doc_id) re-group (the rationale of i34's
+    array-min signatures)."""
     pairs = minhash_band_pairs(d).localCheckpoint()  # reused: ids + join
     cand_ids = (pairs.select(F.col("da").alias("doc_id"))
                 .union(pairs.select(F.col("db").alias("doc_id"))).distinct())
-    # Broadcast hint GUARDED on the measured candidate count (ADVICE r21):
+    # Broadcast hint GUARDED on the measured candidate count:
     # banding collisions grow with duplicate-heavy corpora, so a forced
     # broadcast could blow the 8 GB relation cap at corpus scale where an
     # unhinted plan would fall back to a shuffle join.  pairs is pinned,
@@ -2447,10 +2411,10 @@ def lsh_calibration_frame(d: DataFrame) -> DataFrame:
     if pairs.count() <= _I68_BROADCAST_MAX_PAIRS:
         cand_ids = F.broadcast(cand_ids)
 
-    docs = d.withColumn("t", F.split("text", " ")).filter(F.size("t") >= 3)
+    docs = d.withColumn("t", tokens()).filter(F.size("t") >= 3)
     cand_docs = (
         docs.join(cand_ids, "doc_id", "left_semi")
-        .select("doc_id", F.array_distinct(F.expr(_SHINGLES_SPARK)).alias("sha"))
+        .select("doc_id", F.array_distinct(ngrams("t", 3)).alias("sha"))
         .withColumn("n", F.size("sha"))
         .localCheckpoint()  # candidates only — tiny; reused 3x
     )
@@ -2507,10 +2471,10 @@ def i68_lsh_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate set and the shared-count set followed by a 9-row-key
     aggregation with map-side combine.
 
-    The scan is widened like i34's (r21): both the signature md5s and
-    the exact-Jaccard shingle explode are CPU-bound map work, and the
-    local documents fixture is one parquet row group — without the
-    guarded widening every hash ran on a single core (measured 5.7 s
-    warm in the r21 registry sweep; the guard no-ops at corpus scale)."""
+    The scan is widened like i34's: both the signature md5s and the
+    exact-Jaccard shingle explode are CPU-bound map work, and the local
+    documents fixture is one parquet row group — without the guarded
+    widening every hash ran on a single core (measured 5.7 s warm in a
+    registry sweep; the guard no-ops at corpus scale)."""
     return lsh_calibration_frame(
         widen_if_narrow(load_table(spark, sf_dir, "documents"), "doc_id"))

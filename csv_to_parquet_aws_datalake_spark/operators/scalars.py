@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..functions.scalar import (BIGINT_BOUND, finite_or_null,
                                 representable_or_null)
+from ..functions.text import tokens
 from ..loader import load_table, widen_if_narrow
 from ..registry import query
 
@@ -81,7 +82,7 @@ def h03_split_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DuckDB needs unnest in a subquery to GROUP over it (SURVEY.md §7.3/3)
     d = load_table(spark, sf_dir, "documents")
     return (
-        d.select(F.explode(F.split("text", " ")).alias("tok"))
+        d.select(F.explode(tokens()).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), "tok")
@@ -217,7 +218,7 @@ def h07_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # higher-order functions (transform/filter/aggregate) stay JVM-side —
     # no UDF needed for per-element logic
     d = load_table(spark, sf_dir, "documents")
-    return d.withColumn("toks", F.split("text", " ")).select(
+    return d.withColumn("toks", tokens()).select(
         "doc_id",
         F.size("toks").alias("n_toks"),
         F.size(F.array_distinct("toks")).alias("n_uniq"),
@@ -343,10 +344,9 @@ def h17_array_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # array_union / array_intersect / array_except between the distinct
     # token sets of each document's two halves — all JVM-side set algebra
     d = load_table(spark, sf_dir, "documents")
-    a = F.array_distinct(F.split(
-        F.expr("substring(text, 1, n_chars div 2)"), " "))
-    b = F.array_distinct(F.split(
-        F.expr("substring(text, n_chars div 2 + 1, n_chars)"), " "))
+    a = F.array_distinct(tokens(F.expr("substring(text, 1, n_chars div 2)")))
+    b = F.array_distinct(tokens(
+        F.expr("substring(text, n_chars div 2 + 1, n_chars)")))
     return (
         d.withColumn("a", a).withColumn("b", b)
         .select(

@@ -1,1 +1,1 @@
-"""Physical-plan assertions (pushdown / broadcast / codegen) used in tests."""
+"""Plan reading and the anti-pattern lint every oracle-paired query clears."""

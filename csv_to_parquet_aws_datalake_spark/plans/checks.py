@@ -1,13 +1,12 @@
-"""Physical-plan assertions — the 100 TB design is enforced here, not just
-described: tests fail if a filter stops pushing down, a dimension join
-stops broadcasting, or a top-k degenerates into a global sort.
+"""Physical-plan reading and the registry-wide anti-pattern lint — the
+100 TB design is enforced here, not just described: every oracle-paired
+query must clear :func:`assert_no_antipatterns`.
 
 AQE caveat: before execution, ``physical_plan`` shows the INITIAL adaptive
 plan (``isFinalPlan=false``) — static properties (PushedFilters,
 ReadSchema, pinned broadcast hints) are valid there, but anything AQE can
 rewrite at runtime (join strategy switches, coalesced reads, codegen
-spans) is only trustworthy on the FINAL plan.  ``assert_in_final_plan``
-executes the DataFrame first and asserts on what actually ran.
+spans) is only trustworthy after the DataFrame has run.
 """
 
 from __future__ import annotations
@@ -15,38 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def physical_plan(df: DataFrame, *, executed: bool = False) -> str:
-    if executed:
-        df.collect()
+def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
-def assert_in_plan(df: DataFrame, *needles: str) -> None:
-    """Assert against the static (pre-execution) plan; use only for
-    properties AQE cannot change (pushdown, read schema, hints)."""
-    plan = physical_plan(df)
-    for n in needles:
-        if n not in plan:
-            raise AssertionError(f"expected {n!r} in physical plan:\n{plan}")
-
-
-def assert_in_final_plan(df: DataFrame, *needles: str) -> None:
-    """Execute, then assert against the finalized adaptive plan."""
-    plan = physical_plan(df, executed=True)
-    for n in needles:
-        if n not in plan:
-            raise AssertionError(f"expected {n!r} in FINAL plan:\n{plan}")
-
-
-def assert_not_in_plan(df: DataFrame, *needles: str) -> None:
-    plan = physical_plan(df)
-    for n in needles:
-        if n in plan:
-            raise AssertionError(f"did not expect {n!r} in physical plan:\n{plan}")
 
 
 # Scale anti-patterns linted on EVERY oracle-paired query (wired into
@@ -64,19 +33,18 @@ ANTIPATTERN_ALLOW: dict[str, set[str]] = {
 
 def unpartitioned_window_nodes(df: DataFrame) -> list[str]:
     """Window nodes in the OPTIMIZED LOGICAL plan whose partitionSpec is
-    EMPTY — the authoritative form of the global-window test (ADVICE r7):
-    instead of re-parsing the plan STRING (where an expression that
-    itself prints ``], [`` — e.g. two constant-folded array literals as
-    adjacent arguments — can mis-bracket the splitter in
-    ``unpartitioned_window_lines``), walk the plan tree and ask each
-    logical Window for its partition spec directly.  One logical Window
-    covers every physical incarnation (WindowExec, WindowGroupLimit
-    pushdowns, and the pandas GROUPED_AGG forms ArrowWindowPython /
-    WindowInPandas — those are physical choices made AFTER this node).
-    Foldable partition keys (``partitionBy(lit(0))``) are removed by the
-    optimizer before this plan, so they are correctly reported as
-    unpartitioned, matching the physical-string linter's semantics.
-    Subquery expressions carry their own plan trees; they are walked too.
+    EMPTY — the single-task global windows Spark warns about with "No
+    Partition Defined".  Walking the plan tree and asking each logical
+    Window for its partition spec is exact where re-parsing the plan
+    STRING is not: a window expression that itself prints ``], [`` (two
+    constant-folded array literals as adjacent arguments) mis-brackets a
+    text splitter.  One logical Window covers every physical incarnation
+    (WindowExec, WindowGroupLimit pushdowns, and the pandas GROUPED_AGG
+    forms ArrowWindowPython / WindowInPandas — those are physical choices
+    made AFTER this node).  Foldable partition keys
+    (``partitionBy(lit(0))``) are removed by the optimizer before this
+    plan, so they are correctly reported as unpartitioned.  Subquery
+    expressions carry their own plan trees; they are walked too.
     """
     out: list[str] = []
     stack = [df._jdf.queryExecution().optimizedPlan()]
@@ -94,43 +62,6 @@ def unpartitioned_window_nodes(df: DataFrame) -> list[str]:
     return out
 
 
-def unpartitioned_window_lines(plan: str) -> list[str]:
-    """Plan lines whose Window node has an EMPTY partition spec — the
-    single-task global windows Spark warns about with "No Partition
-    Defined".  A physical Window prints ``Window [exprs], [part], [order]``
-    when fully specified, ``Window [exprs], [part]`` with no ordering,
-    ``Window [exprs], [order]`` when unpartitioned, and bare
-    ``Window [exprs]`` when neither (e.g. a whole-table frame via
-    ``partitionBy()`` with no keys).  The one-separator forms are told
-    apart by the trailing group: only an ORDER spec carries sort
-    directions (SortOrder always prints ASC/DESC); the zero-separator
-    form is always unpartitioned.  (A ``partitionBy(lit(0))`` does NOT
-    escape this: Catalyst constant-folds foldable partition expressions
-    away, verified empirically on 4.1.)  A GROUPED_AGG pandas UDF over a
-    window prints the same grammar and serializes the same way —
-    ``ArrowWindowPython`` on Spark 4.1, ``WindowInPandas`` on earlier
-    lines — matched too (review r7 finding: a substring test on
-    "Window [" alone let it escape).
-
-    Known limit (ADVICE r7): the ``], [`` bracket-splitting can
-    mis-bracket when a window EXPRESSION itself prints that separator
-    (two constant-folded array literals as adjacent arguments).  Kept as
-    the plan-TEXT heuristic for audits that only hold a string; the
-    enforcement path (``assert_no_antipatterns``) uses the logical-tree
-    walk in ``unpartitioned_window_nodes`` instead."""
-    out = []
-    for line in plan.splitlines():
-        for node in ("ArrowWindowPython [", "WindowInPandas [", "Window ["):
-            if node in line:
-                groups = line.split(node, 1)[1].split("], [")
-                if len(groups) == 1 or (
-                        len(groups) == 2
-                        and (" ASC" in groups[1] or " DESC" in groups[1])):
-                    out.append(line.strip())
-                break  # WindowInPandas lines must not re-match "Window ["
-    return out
-
-
 def assert_no_antipatterns(name: str, df: DataFrame) -> None:
     """Fail if a query's physical plan contains a scale anti-pattern it has
     not explicitly opted into: an unbroadcast cartesian product,
@@ -139,7 +70,7 @@ def assert_no_antipatterns(name: str, df: DataFrame) -> None:
     the single-task total-order shape that serializes a table-sized input
     at 100 TB (global row numbers come from
     operators.windows.global_row_number instead).  The window test reads
-    the logical plan's partitionSpec (r9), not the plan string."""
+    the logical plan's partitionSpec, not the plan string."""
     plan = physical_plan(df)
     allowed = ANTIPATTERN_ALLOW.get(name, set())
     if "CartesianProduct" in plan and "cartesian" not in allowed:

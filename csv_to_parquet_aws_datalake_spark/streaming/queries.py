@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.text import ngrams, tokens
 from ..loader import load_table
 from ..registry import query
 from ..session import configure
@@ -801,24 +802,18 @@ def j10_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_memory(agg, "j10", "complete")
 
 
-# ---- j12: streaming near-dup ingest check (stream-vs-corpus LSH;
-# ---- registered round 17 from the r16 staging bank — the §7.15
-# ---- ledger's named move) --------------------------------------------------
-
-#: per-ROW MinHash signature expressions — the i34 slot contract
-#: (slot k = min over distinct shingles of hex digits [8*(k%4)+1, +8)
-#: of md5(seed(k//4) || shingle)) restated as map-side higher-order
-#: functions: a STREAM cannot run i34's shingle-explode + groupBy-min
-#: (a per-doc streaming aggregation would need watermark state), but
-#: min-over-a-row's-own-shingles needs no aggregation at all —
-#: array_min(transform(...)) is stateless, so the signature computes
-#: inside any micro-batch.  Equality with the registered kernel's
-#: groupBy formulation is pinned in tests.
-_ROW_SHINGLES = ("array_distinct(transform(sequence(1, size(t) - 2),"
-                 " i -> concat_ws(' ', slice(t, i, 3))))")
-
+# ---- j12: streaming near-dup ingest check (stream-vs-corpus LSH) ----------
 
 def _row_sig_cols() -> list[str]:
+    """Per-ROW MinHash signature expressions over the distinct-shingle
+    array ``shd`` — the i34 slot contract (slot k = min over distinct
+    shingles of hex digits [8*(k%4)+1, +8) of md5(seed(k//4) || shingle))
+    restated as map-side higher-order functions: a STREAM cannot run
+    i34's shingle-explode + groupBy-min (a per-doc streaming aggregation
+    would need watermark state), but min-over-a-row's-own-shingles needs
+    no aggregation at all — array_min(transform(...)) is stateless, so
+    the signature computes inside any micro-batch.  Equality with the
+    registered kernel's groupBy formulation is pinned in tests."""
     return [
         f"array_min(transform(shd, sh -> substring(md5(concat('{k // 4}|',"
         f" sh)), {(k % 4) * 8 + 1}, 8))) AS s{k}"
@@ -847,9 +842,9 @@ def j12_bands_frame(frame: DataFrame) -> DataFrame:
     join) and to the static corpus side; the batch-twin plan pin in
     tests/test_r17_queries.py builds on it too."""
     sig = (frame
-           .withColumn("t", F.split("text", " "))
+           .withColumn("t", tokens())
            .filter(F.size("t") >= 3)
-           .withColumn("shd", F.expr(_ROW_SHINGLES))
+           .withColumn("shd", F.array_distinct(ngrams("t", 3)))
            .selectExpr("doc_id", *_row_sig_cols()))
     return sig.select(
         "doc_id",
@@ -918,8 +913,8 @@ def j12_stream_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch and pinned (localCheckpoint — a stream-static join re-reads
     the static side every micro-batch, so an unpinned plan would
     re-shingle the whole corpus per trigger); the stream side computes
-    per-row signatures with the map-side `_ROW_SIG_COLS` formulation
-    (no streaming aggregation — see `_ROW_SHINGLES`), explodes its 4
+    per-row signatures with the map-side `_row_sig_cols` formulation
+    (no streaming aggregation — see its docstring), explodes its 4
     band keys statelessly, inner-joins the static bands, and counts
     band hits per (batch_doc, corpus_doc) as a complete-mode streaming
     aggregation drained through availableNow in 2 micro-batches

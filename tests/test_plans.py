@@ -398,68 +398,13 @@ def test_registry_exchange_budget(spark, sf_dir, monkeypatch):
         + ", ".join(unbudgeted))
 
 
-def test_global_window_linter_detects_and_clears(spark, sf_dir):
-    # sanity of the new anti-pattern rule itself: a naive unpartitioned
-    # window must be flagged, a partitioned one must not, and the six
-    # formerly-global queries (VERDICT r6 items 3/4/7) must now be clean
-    from pyspark.sql.window import Window as W
-
-    from csv_to_parquet_aws_datalake_spark.plans.checks import (
-        unpartitioned_window_lines,
-    )
-
-    df = spark.range(10)
-    naive = df.select(F.row_number().over(W.orderBy("id")).alias("rn"))
-    assert unpartitioned_window_lines(physical_plan(naive))
-    # unpartitioned AND unordered (whole-table frame): the zero-separator
-    # form the first linter cut missed (review r7 finding)
-    bare = df.select(F.sum("id").over(W.partitionBy()).alias("s"))
-    assert unpartitioned_window_lines(physical_plan(bare))
-    part = df.select(
-        F.row_number().over(
-            W.partitionBy(F.col("id") % 2).orderBy("id")).alias("rn"))
-    assert not unpartitioned_window_lines(physical_plan(part))
-    # partitioned but unordered: one separator, no direction — NOT flagged
-    # (the false positive the ASC/DESC disambiguator exists for)
-    part_noord = df.select(
-        F.count(F.lit(1)).over(W.partitionBy(F.col("id") % 2)).alias("c"))
-    assert not unpartitioned_window_lines(physical_plan(part_noord))
-    # a GROUPED_AGG pandas UDF over a global window compiles to
-    # WindowInPandas — same single-task shape, must be flagged too
-    import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def _pmean(v: pd.Series) -> float:
-        return float(v.mean())
-
-    pandas_global = df.select(
-        _pmean("id").over(W.orderBy("id").rowsBetween(
-            W.unboundedPreceding, W.currentRow)).alias("m"))
-    plan = physical_plan(pandas_global)
-    assert "ArrowWindowPython" in plan or "WindowInPandas" in plan
-    assert unpartitioned_window_lines(plan)
-    pandas_part = df.select(
-        _pmean("id").over(
-            W.partitionBy(F.col("id") % 2).orderBy("id").rowsBetween(
-                W.unboundedPreceding, W.currentRow)).alias("m"))
-    assert not unpartitioned_window_lines(physical_plan(pandas_part))
-
-    for qid in ("e04_ntile", "e05_percent_cume", "e08_range_frame",
-                "i30_zipf_token_rank", "i40_token_rarity_score",
-                "i44_vocab_index"):
-        plan = physical_plan(registry.QUERIES[qid](spark, sf_dir))
-        assert not unpartitioned_window_lines(plan), qid
-
-
-def test_global_window_node_walk_agrees_and_beats_string_heuristic(spark):
-    # ADVICE r7: the enforcement path now asks the logical Window node for
-    # its partitionSpec instead of re-parsing the plan string.  First, the
-    # node walk must agree with the string heuristic on its whole
-    # existing case matrix; then the counterexample the string form
-    # mis-brackets — a window EXPRESSION whose arguments print "], ["
-    # (two constant-folded array literals) — must still be judged by the
-    # actual partition spec.
+def test_global_window_node_walk(spark):
+    # the global-window lint asks each logical Window node for its
+    # partitionSpec: unpartitioned windows (ordered, bare, folded-constant
+    # keys, pandas GROUPED_AGG) are flagged and partitioned ones are not,
+    # including a window EXPRESSION whose arguments print "], [" (two
+    # constant-folded array literals), which a plan-string parser would
+    # mis-bracket.
     from pyspark.sql.window import Window as W
 
     from csv_to_parquet_aws_datalake_spark.plans.checks import (

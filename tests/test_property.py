@@ -580,16 +580,19 @@ def test_row_signature_matches_slot_contract(spark, texts):
 
     from pyspark.sql import functions as F
 
+    from csv_to_parquet_aws_datalake_spark.functions.text import (
+        ngrams,
+        tokens,
+    )
     from csv_to_parquet_aws_datalake_spark.streaming.queries import (
-        _ROW_SHINGLES,
         _row_sig_cols,
     )
 
     rows = [(i, " ".join(toks)) for i, toks in enumerate(texts)]
     df = (spark.createDataFrame(rows, "doc_id long, text string")
-          .withColumn("t", F.split("text", " "))
+          .withColumn("t", tokens())
           .filter(F.size("t") >= 3)
-          .withColumn("shd", F.expr(_ROW_SHINGLES))
+          .withColumn("shd", F.array_distinct(ngrams("t", 3)))
           .selectExpr("doc_id", *_row_sig_cols()))
     got = {r["doc_id"]: tuple(r[f"s{k}"] for k in range(8))
            for r in df.collect()}

@@ -20,25 +20,23 @@ def test_j12_row_signatures_match_kernel(spark, sf_dir):
     # stream-safe form) must equal the registered i34 kernel's
     # shingle-explode + groupBy-min formulation slot for slot: same
     # distinct shingle set, same md5 slot substrings, same (string) min
+    from csv_to_parquet_aws_datalake_spark.functions.text import (
+        ngrams,
+        tokens,
+    )
     from csv_to_parquet_aws_datalake_spark.streaming.queries import (
-        _ROW_SHINGLES,
         _row_sig_cols,
     )
 
     d = (spark.read.parquet(f"{sf_dir}/documents.parquet")
          .filter(F.col("text").isNotNull()))
-    row_sig = (d.withColumn("t", F.split("text", " "))
-               .filter(F.size("t") >= 3)
-               .withColumn("shd", F.expr(_ROW_SHINGLES))
+    toks = d.withColumn("t", tokens()).filter(F.size("t") >= 3)
+    row_sig = (toks.withColumn("shd", F.array_distinct(ngrams("t", 3)))
                .selectExpr("doc_id", *_row_sig_cols()))
 
-    toks = d.withColumn("t", F.split("text", " ")).filter(F.size("t") >= 3)
-    from csv_to_parquet_aws_datalake_spark.operators.llm_text import (
-        _SHINGLES_SPARK,
-    )
     sh = toks.select(
         "doc_id",
-        F.explode(F.array_distinct(F.expr(_SHINGLES_SPARK))).alias("sh"))
+        F.explode(F.array_distinct(ngrams("t", 3))).alias("sh"))
     hashed = sh.select(
         "doc_id",
         F.md5(F.concat(F.lit("0|"), F.col("sh"))).alias("h0"),

@@ -97,8 +97,11 @@ def test_i68_exact_duplicates_land_in_bucket_8(spark):
     # lens, on a crafted frame (the corpus has no byte-exact dups):
     # identical texts must bucket at n_sig_match = 8 with exact
     # Jaccard 1.0; the unrelated filler must never reach their bucket
+    from csv_to_parquet_aws_datalake_spark.functions.text import (
+        ngrams,
+        tokens,
+    )
     from csv_to_parquet_aws_datalake_spark.operators.llm_text import (
-        _SHINGLES_SPARK,
         lsh_calibration_frame,
         minhash_band_pairs,
     )
@@ -114,9 +117,9 @@ def test_i68_exact_duplicates_land_in_bucket_8(spark):
     spark.conf.set("spark.sql.shuffle.partitions", "1")
     try:
         pairs = minhash_band_pairs(d)
-        docs = d.withColumn("t", F.split("text", " "))
+        docs = d.withColumn("t", tokens())
         sh = docs.select("doc_id", F.explode(
-            F.array_distinct(F.expr(_SHINGLES_SPARK))).alias("sh"))
+            F.array_distinct(ngrams("t", 3))).alias("sh"))
         counts = {r["doc_id"]: r["n"] for r in
                   sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
                   .collect()}

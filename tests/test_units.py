@@ -8,6 +8,7 @@ from __future__ import annotations
 import datetime
 import os
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.testing import assertDataFrameEqual
 
@@ -1628,3 +1629,93 @@ def test_second_call_compiles_no_new_classes(spark, sf_dir):
     c0 = compiles()
     i59_semdedup_census_ann(spark, sf).collect()
     assert compiles() - c0 == 0
+
+
+# (id, text): NULL, empty, a single token, exactly two, a doubled space
+# (an empty-string token), a leading space, and 6 and 7 tokens
+_TEXT_EDGE_ROWS = [(1, None), (2, ""), (3, "a"), (4, "a b"), (5, "a  b c"),
+                   (6, " a b c d e"), (7, "a b c d e f"),
+                   (8, "a b c d e f g")]
+_TEXT_EDGE_TOKENS = {
+    1: None, 2: [""], 3: ["a"], 4: ["a", "b"], 5: ["a", "", "b", "c"],
+    6: ["", "a", "b", "c", "d", "e"], 7: ["a", "b", "c", "d", "e", "f"],
+    8: ["a", "b", "c", "d", "e", "f", "g"],
+}
+_TEXT_EDGE_NGRAMS = {
+    2: {1: [], 2: [], 3: [], 4: ["a b"], 5: ["a ", " b", "b c"],
+        6: [" a", "a b", "b c", "c d", "d e"],
+        7: ["a b", "b c", "c d", "d e", "e f"],
+        8: ["a b", "b c", "c d", "d e", "e f", "f g"]},
+    3: {1: [], 2: [], 3: [], 4: [], 5: ["a  b", " b c"],
+        6: [" a b", "a b c", "b c d", "c d e"],
+        7: ["a b c", "b c d", "c d e", "d e f"],
+        8: ["a b c", "b c d", "c d e", "d e f", "e f g"]},
+    5: {1: [], 2: [], 3: [], 4: [], 5: [],
+        6: [" a b c d", "a b c d e"],
+        7: ["a b c d e", "b c d e f"],
+        8: ["a b c d e", "b c d e f", "c d e f g"]},
+}
+_TEXT_EDGE_CHUNKS = {
+    2: {1: [], 2: [""], 3: ["a"], 4: ["a b"], 5: ["a ", "b c"],
+        6: [" a", "b c", "d e"], 7: ["a b", "c d", "e f"],
+        8: ["a b", "c d", "e f", "g"]},
+    3: {1: [], 2: [""], 3: ["a"], 4: ["a b"], 5: ["a  b", "c"],
+        6: [" a b", "c d e"], 7: ["a b c", "d e f"],
+        8: ["a b c", "d e f", "g"]},
+    5: {1: [], 2: [""], 3: ["a"], 4: ["a b"], 5: ["a  b c"],
+        6: [" a b c d", "e"], 7: ["a b c d e", "f"],
+        8: ["a b c d e", "f g"]},
+}
+
+
+@pytest.mark.parametrize("n", [2, 3, 5])
+def test_text_builders_on_edge_rows(spark, n):
+    # short documents are where Spark's descending sequence(1, 0) would
+    # hand slice a zero start; under ANSI that raises, so the builders
+    # must answer with an empty array instead (NULL text included)
+    from csv_to_parquet_aws_datalake_spark.functions.text import (
+        chunks,
+        ngrams,
+        tokens,
+    )
+
+    t = (spark.createDataFrame(_TEXT_EDGE_ROWS, "id long, text string")
+         .select("id", tokens().alias("t")))
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        rows = t.select("id", "t", ngrams("t", n).alias("g"),
+                        chunks("t", n).alias("c")).collect()
+        pos = t.select("id", F.posexplode(ngrams("t", n))).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert {r["id"]: r["t"] for r in rows} == _TEXT_EDGE_TOKENS
+    assert {r["id"]: r["g"] for r in rows} == _TEXT_EDGE_NGRAMS[n]
+    assert {r["id"]: r["c"] for r in rows} == _TEXT_EDGE_CHUNKS[n]
+    # posexplode numbers each document's grams from 0, the position of
+    # the gram's first token (the span kernels' `pos`)
+    assert sorted((r["id"], r["pos"], r["col"]) for r in pos) == sorted(
+        (i, p, g) for i, gs in _TEXT_EDGE_NGRAMS[n].items()
+        for p, g in enumerate(gs))
+
+
+def test_tokenizer_and_ngrams_have_one_owner():
+    # functions/text.py is the only module that decides how text becomes
+    # tokens and tokens become grams; a hand-rolled split or sequence-
+    # indexed transform elsewhere would reopen the short-document trap
+    import re
+
+    pkg = os.path.join(_REPO, "csv_to_parquet_aws_datalake_spark")
+    owner = os.path.join(pkg, "functions", "text.py")
+    pattern = re.compile(r"F\.split\(|(?<![\w.])split\(|transform\(sequence\(")
+    hits = []
+    for root, _, files in os.walk(pkg):
+        for f in files:
+            path = os.path.join(root, f)
+            if not f.endswith(".py") or path == owner:
+                continue
+            with open(path, encoding="utf-8") as fh:
+                hits += [f"{os.path.relpath(path, _REPO)}:{i}: {line.strip()}"
+                         for i, line in enumerate(fh, 1)
+                         if pattern.search(line)]
+    assert not hits, "\n".join(hits)

@@ -8,7 +8,7 @@ round-over-round — this tool makes that diff one command:
     python tools/bench_compare.py BENCH_r04.json BENCH_r05.json
 
 Flags any query slower than the previous round by more than WARN_RATIO
-(default 1.5x — beyond shared-box noise for bench.py's median-of-5; a
+(1.5x — beyond shared-box noise for bench.py's median-of-5; a
 median-of-3 round showed spurious 2.9x swings, see SURVEY §5 round-6 log),
 any headline query over 2x its reference number parsed from BASELINE.md's
 measured table (BASELINE.json carries only metadata, not timings), and any
@@ -23,7 +23,7 @@ import os
 import re
 import sys
 
-WARN_RATIO = float(os.environ.get("SPARK_GRAFT_BENCH_WARN_RATIO", "1.5"))
+WARN_RATIO = 1.5
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 

@@ -82,14 +82,10 @@ def sweep(spark, sf_dir: str, prefixes: tuple[str, ...] = ("",)) -> dict:
         if not name.startswith(prefixes):
             continue
         if name in registry.STREAMING:
-            # streaming rows (the registry's explicit marker, not the
-            # "j" name prefix — ADVICE r16): fn() DRAINS a real stream
-            # and returns a memory-table (or re-read parquet) frame, so
-            # the "plan" this sweep would budget is a vacuous table
-            # scan bought at the price of a full drain per sweep (r16
-            # suite-time audit).  Their real scale contracts are gated
-            # by the j-family tests (state partitioning, no-data-batch,
-            # per-query pins), not by an exchange count.
+            # fn() DRAINS a real stream and returns a memory-table frame:
+            # its "plan" is a vacuous table scan bought with a full drain.
+            # The j-family tests gate those scale contracts (state
+            # partitioning, no-data batch), not an exchange count.
             out[name] = {"skipped": "streaming-drain"}
             continue
         try:
