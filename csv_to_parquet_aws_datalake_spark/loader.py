@@ -19,14 +19,10 @@ zero-shuffle map expression, fully fused into the scan by codegen.
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .session import configure
-
-_LOG = logging.getLogger(__name__)
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -70,82 +66,38 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str,
-                names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
-#: Extensions whose files Spark cannot split by byte range: the whole
-#: file is one task regardless of size, so the byte-derived estimate
-#: below would over-report their parallelism (ADVICE r9a; ``.snappy``
-#: added r10 ADVICE — Hadoop's SnappyCodec is equally non-splittable
-#: for text sources, unlike snappy-in-parquet which compresses per
-#: page and never reaches this path).
-_NON_SPLITTABLE_EXTS = (".gz", ".zst", ".bz2", ".deflate", ".lz4", ".xz",
-                        ".snappy")
+def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    return {n: load_table(spark, sf_dir, n) for n in TABLES}
 
 
 def scan_split_estimate(df: DataFrame) -> int:
-    """Metadata-only estimate of a frame's scan parallelism (public
-    loader API since r12 — ADVICE r11: i37 sizes its salt modulus from
-    it at plan-build time, so the cross-module dependency is part of
-    the loader's contract, not a private detail; r9: replaces
-    the ``df.rdd.getNumPartitions()`` probe, which built a plan-to-RDD
-    lineage on the driver per call).
+    """Metadata-only estimate of a file-rooted frame's scan parallelism:
+    ``ceil(total_bytes / maxPartitionBytes)``, at least 1.
 
-    File-rooted frames: ``ceil(total_bytes / maxPartitionBytes)`` — a
-    LOWER bound on the planned task count (Spark may split finer via
-    bytesPerCore, never coarser), so a "healthy" verdict is trustworthy
-    in both directions the raw file COUNT is not (r9 review): one large
-    splittable file estimates large (no spurious at-scale widening), and
-    many tiny packed files estimate 1 (the single-task explode hazard is
-    caught).  When any input file carries a non-splittable-codec
-    extension (gzip CSV/JSON etc.), byte-range splittability no longer
-    holds — each such file executes as ONE task however large — so the
-    estimate is computed PER FILE CLASS (ADVICE r9a, refined per r10
-    ADVICE for mixed directories): every oversized (> maxPartitionBytes)
-    non-splittable file is exactly one task; everything else — small
-    non-splittable files, which Spark still PACKS multiple-per-task, plus
-    all splittable bytes — contributes one shared ``ceil(bytes /
-    maxPartitionBytes)`` term (shared, not summed per class, so two
-    half-full remainders can't round up to a count bin-packing would
-    achieve in one task — the lower-bound contract survives).  An
-    all-gzip scan of few huge files reads as narrow, and a directory
-    mixing one huge gzip with many splittable parquet files no longer
-    charges the parquet side the gzip side's per-file cap.  Codec
-    assumption:
-    a large single-ROW-GROUP parquet file is equally unsplittable in
-    practice but is undetectable without footer reads; callers get the
-    documented lower-bound contract only for multi-row-group parquet
-    (the driver corpus) and uncompressed/splittable text.
-    Sizes come from the local filesystem; non-local schemes
-    fall back to the file count (a real remote corpus has many files).
-    Non-file frames: the planned output partitioning, where 0 is
-    Catalyst's UnknownPartitioning — "don't know", reported as 0 so the
-    caller treats it as healthy (an unknowable narrow in-memory frame is
-    the caller's contract to avoid, documented there; a debug line marks
-    the path so a contract-violating call site is discoverable, ADVICE
-    r9b)."""
+    It is a LOWER bound on the planned task count (Spark may split finer
+    via bytesPerCore, never coarser), so a "healthy" verdict holds in
+    both directions the raw file COUNT does not: one large file
+    estimates wide (no spurious at-scale widening), and many tiny packed
+    files estimate 1 (the single-task explode hazard is caught).  Every
+    caller hands in a frame rooted in a ``load_table`` parquet scan, and
+    parquet splits by row group; a large single-row-group file is
+    unsplittable in practice but undetectable without footer reads.
+    Sizes come from the local filesystem; non-local schemes fall back to
+    the file count (a real remote corpus has many files).  A frame with
+    no input files estimates 0, which callers treat as healthy."""
     import math
     import os
     from urllib.parse import unquote, urlparse
 
     files = df.inputFiles()
     if not files:
-        n = (df._jdf.queryExecution().executedPlan()
-             .outputPartitioning().numPartitions())
-        if n == 0:
-            _LOG.debug(
-                "scan_split_estimate: no input files and Unknown "
-                "partitioning — treating as healthy per the scan-rooted "
-                "call-site contract (widen_if_narrow docstring)")
-        return n
-    sized = []
+        return 0
+    total = 0
     for f in files:
         if not f.startswith("file:"):
             return len(files)
         try:
-            sized.append((f, os.path.getsize(unquote(urlparse(f).path))))
+            total += os.path.getsize(unquote(urlparse(f).path))
         except OSError:
             return len(files)
     conf = df.sparkSession.conf.get(
@@ -156,21 +108,12 @@ def scan_split_estimate(df: DataFrame) -> int:
                      .byteStringAsBytes(conf))
     except Exception:
         max_pb = 128 * 1024 * 1024
-    whole_file_tasks = 0
-    packable_bytes = 0
-    for f, size in sized:
-        if f.lower().endswith(_NON_SPLITTABLE_EXTS) and size > max_pb:
-            whole_file_tasks += 1  # one task exactly, however large
-        else:
-            packable_bytes += size
-    est = whole_file_tasks + (
-        math.ceil(packable_bytes / max_pb) if packable_bytes else 0)
-    return max(1, est)
+    return max(1, math.ceil(total / max_pb))
 
 
 def widen_if_narrow(df: DataFrame, *key: str) -> DataFrame:
-    """Repartition ``df`` to cluster width ONLY when the scan is under-
-    parallel (fewer splits than cores).
+    """Repartition ``df`` to the session's shuffle width ONLY when the scan
+    is under-parallel.
 
     A single small parquet file is one row group and therefore ONE scan task
     no matter what ``maxPartitionBytes`` says — locally that serializes any
@@ -181,23 +124,22 @@ def widen_if_narrow(df: DataFrame, *key: str) -> DataFrame:
     is one small file, so the shuffle is negligible.  Passing hash ``key``
     columns lets a downstream groupBy on the same keys reuse the exchange.
     """
-    # threshold min(4, defaultParallelism): only a degenerate few-split scan
-    # on a wider host should redistribute.  A real corpus scan (hundreds+ of
-    # splits) never matches, even on a cluster whose core count dwarfs its
-    # split count — and on a host narrower than the scan (parallelism < splits)
-    # a repartition could only REDUCE parallelism while paying a shuffle.
+    # the width is spark.sql.shuffle.partitions, the one plan-width input
+    # (never the host's core count).  Threshold min(4, width): only a
+    # degenerate few-split scan under a wider plan should redistribute.  A
+    # real corpus scan (hundreds+ of splits) never matches, and under a
+    # width narrower than the scan a repartition could only REDUCE
+    # parallelism while paying a shuffle.  The count stays explicit: a
+    # count-less repartition is AQE-coalescible and would fold a tiny
+    # widened scan back to one task.
     #
-    # The split count comes from scan_split_estimate (metadata only, no
-    # RDD conversion — r7 brief item 5, r9 review for the size-based
-    # form).  Call-site contract: hand this helper a SCAN-ROOTED frame
+    # Call-site contract: hand this helper a SCAN-ROOTED frame
     # (projection/filter above a file scan is fine, an exchange or an
-    # in-memory localCheckpoint upstream is not) — for a non-file frame
-    # whose planned partitioning is Unknown the estimate is 0, treated
-    # as healthy, so a narrow constructed frame would silently skip
-    # widening.  Every current caller (i34/i48/i51/i54) passes a
-    # scan-rooted frame.
-    par = df.sparkSession.sparkContext.defaultParallelism
+    # in-memory localCheckpoint upstream is not) — a frame with no input
+    # files estimates 0, treated as healthy, so a narrow constructed frame
+    # would silently skip widening.
+    width = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     splits = scan_split_estimate(df)
-    if splits == 0 or splits >= min(4, par):
+    if splits == 0 or splits >= min(4, width):
         return df
-    return df.repartition(par, *key) if key else df.repartition(par)
+    return df.repartition(width, *key) if key else df.repartition(width)

@@ -133,14 +133,13 @@ def i37_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     # salt modulus grows with the corpus (scan_split_estimate, a public
     # loader API — the call runs eagerly at plan-BUILD time and lists
-    # the input files), floored at the session's parallelism so a
-    # single-file local fixture still fans phase 1 out across every
-    # core (r11 review: a hardcoded floor tracked neither the rig nor a
-    # bigger cluster).  Rig note (ADVICE r11): the floor makes the
-    # PHYSICAL plan vary across machines (partition counts, not
-    # exchange counts — the plan budget is rig-stable); output is
-    # provably unaffected, since phase 1 keeps a superset at any salt
-    n_salt = max(spark.sparkContext.defaultParallelism,
+    # the input files), floored at the session's shuffle width
+    # (spark.sql.shuffle.partitions) so a single-file local fixture
+    # still fans phase 1 out across every shuffle partition.  The floor
+    # is a session conf, not the host's core count, so the plan is the
+    # same on any machine; output is provably unaffected by it, since
+    # phase 1 keeps a superset at any salt
+    n_salt = max(int(spark.conf.get("spark.sql.shuffle.partitions")),
                  scan_split_estimate(d))
     # NULL-text docs are excluded by contract on both engines (r12
     # null-docs sweep — unfiltered, DuckDB's concat SKIPS the NULL and
@@ -208,10 +207,10 @@ def i38_doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def packing_bins(d: DataFrame, bin_tokens: int = 512) -> DataFrame:
+def packing_bins(d: DataFrame) -> DataFrame:
     """(lang, bin, n_docs, bin_toks): the ONE greedy fixed-boundary
-    packing definition — doc's bin is ``floor(tokens_before_it /
-    bin_tokens)`` within its language shard, docs in doc_id order.
+    packing definition — doc's bin is ``floor(tokens_before_it / 512)``
+    within its language shard, docs in doc_id order.
     Shared by i39 (the packing itself) and i53 (its efficiency census) so
     the census can never silently describe a packing that no longer
     exists (the same convention as dup_gram_positions for i48/i54).
@@ -240,7 +239,7 @@ def packing_bins(d: DataFrame, bin_tokens: int = 512) -> DataFrame:
     )
     placed = toks.withColumn("run_sum", F.sum("n_toks").over(w)).select(
         "lang", "n_toks",
-        F.expr(f"(run_sum - n_toks) div {bin_tokens}").alias("bin"),
+        F.expr("(run_sum - n_toks) div 512").alias("bin"),
     )
     return placed.groupBy("lang", "bin").agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("n_toks").alias("bin_toks"))

@@ -398,8 +398,9 @@ def i08_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tfidf_top_terms(load_table(spark, sf_dir, "documents"))
 
 
-def tfidf_top_terms(d: DataFrame, top_n: int = 3) -> DataFrame:
-    """The i08 kernel over any (doc_id, text, ...) frame."""
+def tfidf_top_terms(d: DataFrame) -> DataFrame:
+    """The i08 kernel over any (doc_id, text, ...) frame: each document's
+    top 3 terms."""
     n_docs = F.broadcast(d.agg(F.count(F.lit(1)).alias("nd")))
     tok = d.select("doc_id", F.explode(tokens()).alias("tok"))
     # pin tf: both the score join and the df aggregate consume it, and
@@ -417,7 +418,7 @@ def tfidf_top_terms(d: DataFrame, top_n: int = 3) -> DataFrame:
     w = W.partitionBy("doc_id").orderBy(F.desc("tfidf_raw"), "tok")
     return (
         scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= top_n)
+        .filter(F.col("rn") <= 3)
         .select("doc_id", "tok", F.round("tfidf_raw", 6).alias("tfidf"))
     )
 

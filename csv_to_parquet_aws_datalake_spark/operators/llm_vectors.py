@@ -190,8 +190,8 @@ def _centroid_table(emb: DataFrame) -> DataFrame:
         (F.sum(F.col("v").cast("decimal(18,6)")).cast("double")
          / F.count(F.lit(1))).alias("c"))
     return cen.groupBy(F.col("label").alias("clabel")).agg(
-        F.transform(F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                    lambda x: x.c).alias("carr"))
+        F.expr("transform(array_sort(collect_list(struct(pos, c))), x -> x.c)")
+        .alias("carr"))
 
 
 def assign_nearest_centroid(emb: DataFrame,
@@ -524,20 +524,16 @@ def i31_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     functions over the array column — map-side, no UDF, no shuffle; the
     emitted min/max/sum are the exact-integer audit of the codes."""
     emb = valid_embeddings(load_table(spark, sf_dir, "embeddings"))
-    xd = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    s = (emb.withColumn("xd", xd)
-         .withColumn("absmax",
-                     F.array_max(F.transform(F.col("xd"), lambda x: F.abs(x))))
+    s = (emb.withColumn("xd",
+                        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
+         .withColumn("absmax", F.expr("array_max(transform(xd, x -> abs(x)))"))
          .withColumn("scale", F.when(F.col("absmax") != 0, F.col("absmax"))))
-    q = s.withColumn(
-        "qv", F.transform(F.col("xd"),
-                          lambda x: F.floor(x / F.col("scale") * 127)))
+    q = s.withColumn("qv", F.expr("transform(xd, x -> floor(x / scale * 127))"))
     return q.select(
         "vec_id",
         F.array_min("qv").alias("q_min"),
         F.array_max("qv").alias("q_max"),
-        F.aggregate("qv", F.lit(0).cast("long"), lambda a, x: a + x)
-         .alias("q_sum"),
+        F.expr("aggregate(qv, 0L, (x, y) -> x + y)").alias("q_sum"),
     )
 
 
@@ -651,7 +647,7 @@ def semdedup_census(emb: DataFrame, tau: float = _SEMDEDUP_TAU,
     # an equi-join on the bare cluster label, so its parallelism is capped
     # by the number of DISTINCT clusters — r22 measured the fixture at 10
     # clusters of 32 cores, serializing the O(sum n_c^2) cosine work onto
-    # 10 tasks (4.3 s of i59's 6.9 s).  When clusters < cores, salt the
+    # 10 tasks (4.3 s of i59's 6.9 s).  When clusters < width, salt the
     # left side by pmod(xxhash64(va), s) (deterministic — retry-safe per
     # guide §2.5) and explode the right side s ways, joining on
     # (cluster, salt): every (va < vb) pair still meets exactly once, in
@@ -660,13 +656,17 @@ def semdedup_census(emb: DataFrame, tau: float = _SEMDEDUP_TAU,
     # s * n_clusters keys evenly across the hash space (guide §2.5's
     # "20-100x more keys than partitions" guidance, bounded by the tiny
     # cluster count).  At production scale SemDeDup sizes k with the
-    # corpus (clusters >> cores), so n_salt is 1 and the plan is exactly
+    # corpus (clusters >> width), so n_salt is 1 and the plan is exactly
     # the unsalted one — the right side is never replicated at scale.
+    # The width is spark.sql.shuffle.partitions, the pair join's task
+    # count, never the host's core count, so the branch taken is the
+    # session's choice on any machine.
     # memb.count() is a driver action over the pinned k-row frame, not a
     # data pass.
-    par = emb.sparkSession.sparkContext.defaultParallelism
+    width = int(emb.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     n_clusters = memb.count()
-    n_salt = 1 if n_clusters >= par else math.ceil(4 * par / max(n_clusters, 1))
+    n_salt = (1 if n_clusters >= width
+              else math.ceil(4 * width / max(n_clusters, 1)))
     a = assigned.select(
         F.col("clabel").alias("cl"), F.col("vec_id").alias("va"),
         F.col("embedding").alias("ea"), norm("embedding").alias("na"))

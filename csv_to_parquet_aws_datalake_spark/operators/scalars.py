@@ -224,9 +224,9 @@ def h07_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.array_distinct("toks")).alias("n_uniq"),
         F.array_contains("toks", "join").cast("int").alias("has_join"),
         F.array_join(F.slice(F.sort_array("toks"), 1, 3), ",").alias("first3"),
-        F.size(F.filter("toks", lambda x: F.length(x) > 6)).alias("n_long"),
+        F.expr("size(filter(toks, x -> length(x) > 6))").alias("n_long"),
         F.round(
-            F.aggregate("toks", F.lit(0.0), lambda a, x: a + F.length(x) * 1.0)
+            F.expr("aggregate(toks, 0.0D, (x, y) -> x + length(y) * 1.0D)")
             / F.size("toks"), 4,
         ).alias("avg_len"),
     )
@@ -455,13 +455,11 @@ def h15_map_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
     # map higher-order functions: transform_values + map_filter, JVM-side,
     # flattened back to rows; the oracle unrolls the two entries
     o = load_table(spark, sf_dir, "orders")
-    m0 = F.create_map(
-        F.lit("total"), F.col("o_totalprice"),
-        F.lit("triple"), F.col("o_totalprice") * 3,
-    )
-    m1 = F.transform_values(m0, lambda k, v: v + 1000.0)
-    m2 = F.map_filter(m1, lambda k, v: v > 300000)
-    return o.select("o_orderkey", F.explode(m2).alias("key", "value"))
+    m = F.expr(
+        "map_filter(transform_values("
+        "map('total', o_totalprice, 'triple', o_totalprice * 3),"
+        " (x, y) -> y + 1000.0D), (x, y) -> y > 300000)")
+    return o.select("o_orderkey", F.explode(m).alias("key", "value"))
 
 
 @query(

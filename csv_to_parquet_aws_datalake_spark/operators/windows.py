@@ -99,8 +99,8 @@ def global_row_number(df: DataFrame, order_cols: list,
         # scratch columns; every current caller passes clean projections
         raise ValueError(f"global_row_number scratch-name collision: {clash}")
     order_cols = exprs
-    par = df.sparkSession.sparkContext.defaultParallelism
-    ranged = (df.repartitionByRange(par, *order_cols)
+    width = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    ranged = (df.repartitionByRange(width, *order_cols)
               .withColumn("_gpid", F.spark_partition_id())
               .localCheckpoint())  # pin: ranking+counting read ONE bucket map
     local = ranged.withColumn(
@@ -576,8 +576,9 @@ def e10_sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sessionize(load_table(spark, sf_dir, "events"))
 
 
-def sessionize(ev: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    """The e10 kernel over any (user_id, ts, event_id, ...) frame.  One
+def sessionize(ev: DataFrame) -> DataFrame:
+    """The e10 kernel over any (user_id, ts, event_id, ...) frame: a gap
+    of more than 30 minutes opens a new session.  One
     user_id window shuffle; the session agg reuses the window's
     partitioning.
     Un-timestamped events are excluded by contract on both engines (r13
@@ -588,7 +589,7 @@ def sessionize(ev: DataFrame, gap_minutes: int = 30) -> DataFrame:
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     gap_us = F.unix_micros(F.col("ts")) - F.unix_micros(F.lag("ts").over(w))
     is_new = F.when(
-        gap_us.isNull() | (gap_us > gap_minutes * 60 * 1_000_000), 1
+        gap_us.isNull() | (gap_us > 30 * 60 * 1_000_000), 1
     ).otherwise(0)
     wsum = w.rowsBetween(W.unboundedPreceding, W.currentRow)
     return (

@@ -8,8 +8,12 @@ the test suite when no session exists yet.
 Scale notes (100 TB design intent, SURVEY.md §7.4):
 - AQE on: runtime partition coalescing, broadcast switch, skew-join splitting
   are exactly the knobs that keep a fixed logical plan healthy at 1000×.
-- shuffle partitions ≈ cores locally; on a real cluster this would be
-  2-3× total executor cores (or left to AQE's coalescing from a high initial).
+- every plan width is ``spark.sql.shuffle.partitions``: shuffles, the
+  widening of a narrow scan, the global-rank range split and the salt
+  widths all read it, and no plan reads the host's core count.
+  ``build_session`` sets it to the core count and ``configure`` lifts
+  Spark's 200 default to 32; on a real cluster it would be 2-3× total
+  executor cores (or left to AQE's coalescing from a high initial).
 - UTC session timezone pins timestamp semantics to the oracle engine's.
 - codegen cache sized to the registry's working set: a sweep of the batch
   queries generates 1,712 distinct classes, against Spark's 100-entry LRU,

@@ -22,6 +22,7 @@ import glob
 import os
 import shutil
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -108,6 +109,32 @@ def _run_to_memory(agg: DataFrame, name: str, mode: str,
                        old_ndb)
     q.awaitTermination()
     return spark.table(sink)
+
+
+def _write_arrivals(src: str, n: int,
+                    build_frames: Callable[[], list[DataFrame]]) -> None:
+    """Materialize an ordered arrival fixture: ``src/00.parquet`` …
+    ``src/{n-1:02d}.parquet``, one file per frame of ``build_frames()``.
+
+    The file stream source replays files in (mtime, path) order, so the
+    frames are written sequentially, each as ONE part renamed into its
+    slot.  A complete existing set is reused as-is (fixtures are
+    content-deterministic and ``src`` names the schedule constants), and
+    ``build_frames`` runs only when a file is missing, so any driver
+    action it takes runs only on a rebuild."""
+    expected = [os.path.join(src, f"{i:02d}.parquet") for i in range(n)]
+    if all(os.path.exists(p) for p in expected):
+        return
+    shutil.rmtree(src, ignore_errors=True)
+    os.makedirs(src)
+    for i, df in enumerate(build_frames()):
+        d = os.path.join(src, f"f{i:02d}")
+        df.coalesce(1).write.mode("overwrite").parquet(d)
+        parts = glob.glob(os.path.join(d, "part-*.parquet"))
+        if not parts:
+            raise RuntimeError(f"arrival file {i} of {src} wrote no part")
+        os.rename(parts[0], expected[i])
+        shutil.rmtree(d)
 
 
 @query(
@@ -312,16 +339,11 @@ def j11_stream_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     trailing no-data batch is skipped because every output row emits
     inside its data batch (the j04/r15 tuning contract).  The arrival
     fixture derives from the events table with no collect()."""
-    import glob
-
     from ..loader import load_table
     ev = load_table(spark, sf_dir, "events")
     src = j11_fixture_dir(sf_dir)
-    n_files = 5
-    expected = [os.path.join(src, f"{i:02d}.parquet") for i in range(n_files)]
-    if not all(os.path.exists(p) for p in expected):
-        shutil.rmtree(src, ignore_errors=True)
-        os.makedirs(src)
+
+    def arrivals() -> list[DataFrame]:
         keys = ev.select((F.col("user_id") % 20).alias("key")).distinct()
 
         def burst(minutes: int, replicas: int) -> DataFrame:
@@ -336,7 +358,7 @@ def j11_stream_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(key).cast("long").alias("key"),
                 F.expr(_j11_ts(minutes)).alias("ts"))
 
-        files = [
+        return [
             burst(0, 3),
             burst(_J11_ECHO_MIN, 1).unionByName(
                 filler(*_J11_FILLERS[0])),
@@ -344,16 +366,8 @@ def j11_stream_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
             filler(*_J11_FILLERS[2]),
             burst(_J11_BURST1_MIN, 2),
         ]
-        # sequential writes: the file stream source replays in
-        # (mtime, path) order, so both orders agree with the schedule
-        for i, df in enumerate(files):
-            d = os.path.join(src, f"f{i:02d}")
-            df.coalesce(1).write.mode("overwrite").parquet(d)
-            parts = glob.glob(os.path.join(d, "part-*.parquet"))
-            if not parts:
-                raise RuntimeError(f"j11 fixture file {i} wrote no part")
-            os.rename(parts[0], expected[i])
-            shutil.rmtree(d)
+
+    _write_arrivals(src, 5, arrivals)
 
     stream = (spark.readStream.schema("key long, ts timestamp")
               .option("maxFilesPerTrigger", 1).parquet(src))
@@ -386,30 +400,21 @@ def j05_stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_files = 4
     src = scratch_dir("j05", sf_dir,
                       "arrivals_" + schedule_tag(n_files, 20, 2))
-    expected = [os.path.join(src, f"{i:02d}.parquet") for i in range(n_files)]
-    if not all(os.path.exists(p) for p in expected):
+
+    def arrivals() -> list[DataFrame]:
         # deterministic arrival schedule: chunk by event_id; every 20th
-        # event arrives two chunks later (late by event time).  The fixture
-        # is content-deterministic, so an existing one is reused as-is.
-        shutil.rmtree(src, ignore_errors=True)
-        os.makedirs(src)
-        total = ev.count()
-        chunk = max(1, total // n_files)
+        # event arrives two chunks later (late by event time)
+        chunk = max(1, ev.count() // n_files)
         arrival = ev.withColumn(
             "file_idx",
             F.least(F.lit(n_files - 1),
                     F.expr(f"event_id div {chunk}")
                     + F.when(F.col("event_id") % 20 == 0, 2).otherwise(0)))
-        import glob
-        for i in range(n_files):
-            d = os.path.join(src, f"f{i:02d}")
-            (arrival.filter(F.col("file_idx") == i).drop("file_idx")
-             .coalesce(1).write.mode("overwrite").parquet(d))
-            # flatten the single-file dir into an ordered file name: the
-            # file stream source replays files in (mtime, path) order
-            part = glob.glob(os.path.join(d, "part-*.parquet"))[0]
-            os.rename(part, expected[i])
-            shutil.rmtree(d)
+        return [arrival.filter(F.col("file_idx") == i).drop("file_idx")
+                for i in range(n_files)]
+
+    _write_arrivals(src, n_files, arrivals)
+
     stream = (
         spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", 2).parquet(src)
@@ -533,10 +538,8 @@ def j13_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = scratch_dir(
         "j13", sf_dir,
         "outer_arrivals_" + schedule_tag(_J13_SENTINEL_DAYS, tuple(cols)))
-    expected = [os.path.join(src, f"{i:02d}.parquet") for i in range(2)]
-    if not all(os.path.exists(p) for p in expected):
-        shutil.rmtree(src, ignore_errors=True)
-        os.makedirs(src)
+
+    def arrivals() -> list[DataFrame]:
         real = ev.select(*cols)
         # sentinel rows derived frame-side from the max-ts aggregate —
         # no driver collect() (the j11 fixture convention), one row per
@@ -553,14 +556,9 @@ def j13_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                         (F.col("mt") + F.expr(
                             f"INTERVAL {_J13_SENTINEL_DAYS} DAYS")).alias("ts"))
                     .select(*cols))
-        for i, df in enumerate([real, sentinel]):
-            d = os.path.join(src, f"f{i:02d}")
-            df.coalesce(1).write.mode("overwrite").parquet(d)
-            parts = glob.glob(os.path.join(d, "part-*.parquet"))
-            if not parts:
-                raise RuntimeError(f"j13 fixture file {i} wrote no part")
-            os.rename(parts[0], expected[i])
-            shutil.rmtree(d)
+        return [real, sentinel]
+
+    _write_arrivals(src, 2, arrivals)
 
     stream = (spark.readStream
               .schema("event_id long, user_id long,"
@@ -938,10 +936,8 @@ def j12_stream_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = scratch_dir(
         "j12", sf_dir,
         f"ingest_batch_{schedule_tag(_J12_REKEY, 'src19', 'rownum-parity')}")
-    expected = [os.path.join(src, f"{i:02d}.parquet") for i in range(2)]
-    if not all(os.path.exists(p) for p in expected):
-        shutil.rmtree(src, ignore_errors=True)
-        os.makedirs(src)
+
+    def arrivals() -> list[DataFrame]:
         # split by row_number parity, not doc_id parity: a scale factor
         # whose src19 slice is single-parity would leave one micro-batch
         # file empty and silently degrade the 2-batch contract (ADVICE
@@ -956,15 +952,10 @@ def j12_stream_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise RuntimeError(
                 "j12 ingest fixture needs >= 2 src19 docs to fill both "
                 "micro-batch files")
-        for i in range(2):
-            part_dir = os.path.join(src, f"f{i:02d}")
-            (batch.filter(F.col("_rn") % 2 == i).drop("_rn")
-             .coalesce(1).write.mode("overwrite").parquet(part_dir))
-            parts = glob.glob(os.path.join(part_dir, "part-*.parquet"))
-            if not parts:
-                raise RuntimeError(f"j12 fixture shard {i} wrote no file")
-            os.rename(parts[0], expected[i])
-            shutil.rmtree(part_dir)
+        return [batch.filter(F.col("_rn") % 2 == i).drop("_rn")
+                for i in range(2)]
+
+    _write_arrivals(src, 2, arrivals)
 
     stream = (spark.readStream.schema("doc_id long, text string")
               .option("maxFilesPerTrigger", 1).parquet(src))

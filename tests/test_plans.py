@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from csv_to_parquet_aws_datalake_spark import registry
@@ -137,15 +138,16 @@ def test_variant_scan_keeps_pushdown_under_widen(spark, sf_dir):
     assert "PushedFilters: [IsNotNull(props)]" in plan
 
 
-def test_semdedup_pair_join_salted_when_clusters_sparse(spark):
-    # r22: semdedup_census salts the cluster-label pair join when the
-    # assignment yields fewer clusters than defaultParallelism (the
-    # fixture-scale skew fix; a no-op at production k).  Two clusters on
-    # a local[8]+ session must take the salted shape: both pair-side
-    # exchange keys carry the salt columns.  Result-correctness of the
-    # salted path is pinned independently by test_property's
-    # brute-force reference (its constructed frames have <= 4 labels,
-    # so they exercise exactly this branch).
+@pytest.mark.parametrize("width,salted", [(8, True), (2, False)])
+def test_semdedup_pair_join_salt_follows_shuffle_width(spark, width, salted):
+    # semdedup_census salts the cluster-label pair join when the
+    # assignment yields fewer clusters than the session's shuffle width
+    # (the fixture-scale skew fix; a no-op at production k).  Two
+    # clusters at width 8 take the salted shape, where both pair-side
+    # exchange keys carry the salt columns; at width 2 they do not.  The
+    # width is the session conf, never the host's core count, so both
+    # branches are covered on any machine.  Result-correctness of both
+    # paths is pinned by test_property's brute-force reference.
     from csv_to_parquet_aws_datalake_spark.operators.llm_vectors import (
         semdedup_census,
     )
@@ -153,8 +155,13 @@ def test_semdedup_pair_join_salted_when_clusters_sparse(spark):
     df = spark.createDataFrame(
         [(i, "ab"[i % 2], [float(i % 3 + 1), 1.0]) for i in range(1, 9)],
         "vec_id long, label string, embedding array<float>")
-    plan = physical_plan(semdedup_census(df))
-    assert "sa#" in plan and "sb#" in plan, plan
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(width))
+    try:
+        plan = physical_plan(semdedup_census(df))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert ("sa#" in plan) is salted and ("sb#" in plan) is salted, plan
     assert "CartesianProduct" not in plan
 
 

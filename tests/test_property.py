@@ -381,9 +381,18 @@ def test_semdedup_kernel_matches_bruteforce(spark, vecs, tau):
     rows = [(i, lb, [float(x) for x in v]) for i, (lb, v) in enumerate(vecs)]
     df = spark.createDataFrame(
         rows, "vec_id long, label string, embedding array<float>")
-    got = {r["cluster"]: (r["n_vectors"], r["n_dup"])
-           for r in semdedup_census(df, tau=tau).collect()}
-    assert got == _semdedup_py(rows, tau)
+    want = _semdedup_py(rows, tau)
+    # at most two labels: shuffle width 1 takes the unsalted pair join
+    # and width 8 the salted one, whatever the host's core count
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for width in ("1", "8"):
+            spark.conf.set("spark.sql.shuffle.partitions", width)
+            got = {r["cluster"]: (r["n_vectors"], r["n_dup"])
+                   for r in semdedup_census(df, tau=tau).collect()}
+            assert got == want, width
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 # ---------------------------------------------------------------------------

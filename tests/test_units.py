@@ -418,63 +418,54 @@ def test_readme_coverage_table_matches_registry():
             f"README {f} ids {sorted(spans[f])} != registry {sorted(nums)}"
 
 
-def test_widen_if_narrow_fires_only_on_degenerate_scans(spark):
-    from csv_to_parquet_aws_datalake_spark.loader import widen_if_narrow
-
-    par = spark.sparkContext.defaultParallelism
-    narrow = spark.range(0, 1000).coalesce(1)
-    widened = widen_if_narrow(narrow.withColumnRenamed("id", "doc_id"), "doc_id")
-    assert widened.rdd.getNumPartitions() == par
-    # a healthy multi-split input passes through untouched — no shuffle is
-    # added for a corpus that already has scan parallelism
-    wide = spark.range(0, 1000).repartition(8)
-    assert widen_if_narrow(wide) is wide
-
-
 def test_widen_if_narrow_file_scan_path(spark, sf_dir):
     # the hot-path callers (i34/i48/i51/i54) hand it a scan-rooted frame;
-    # the split count must come from file metadata (r9: the .rdd probe is
-    # gone), so a single-file local scan widens and the projection above
-    # the scan does not hide the files
+    # the split count comes from file metadata, so a single-file local
+    # scan widens to the session's shuffle width and the projection
+    # above the scan does not hide the files
     from csv_to_parquet_aws_datalake_spark.loader import (
         load_table, widen_if_narrow,
     )
 
-    par = spark.sparkContext.defaultParallelism
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     assert len(d.inputFiles()) < 4  # precondition: degenerate local scan
-    assert widen_if_narrow(d).rdd.getNumPartitions() == par
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        assert widen_if_narrow(d).rdd.getNumPartitions() == 8
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def test_scan_split_estimate_is_size_based(spark, sf_dir, tmp_path):
-    # r9 review: the estimate must be bytes/maxPartitionBytes, not the
-    # file count — many tiny packed files still estimate 1 (the
-    # single-task hazard is caught), and enough bytes estimate wide even
-    # from ONE file (no spurious at-scale repartition)
+    # the estimate is bytes/maxPartitionBytes, not the file count — many
+    # tiny packed files still estimate 1 (the single-task hazard is
+    # caught), and enough bytes estimate wide even from ONE file (no
+    # spurious at-scale repartition); a frame with no files is healthy
     from csv_to_parquet_aws_datalake_spark.loader import (
         scan_split_estimate, widen_if_narrow,
     )
 
+    assert scan_split_estimate(spark.range(0, 10).coalesce(1)) == 0
     ten = str(tmp_path / "ten_tiny")
     spark.range(0, 100).repartition(10).write.parquet(ten)
     tiny = spark.read.parquet(ten)
     assert len(tiny.inputFiles()) == 10
     assert scan_split_estimate(tiny) == 1  # Spark would pack these
-    assert widen_if_narrow(tiny) is not tiny
-
-    # shrink the packing target so one modest file estimates "wide":
-    # documents.parquet is tens of KB even at sf0.001
-    prev = spark.conf.get("spark.sql.files.maxPartitionBytes", None)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "4k")
+    prev_width = spark.conf.get("spark.sql.shuffle.partitions")
+    prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
+        assert widen_if_narrow(tiny) is not tiny
+        # shrink the packing target so one modest file estimates "wide":
+        # documents.parquet is tens of KB even at sf0.001
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "4k")
         d = spark.read.parquet(f"{sf_dir}/documents.parquet")
         assert scan_split_estimate(d) >= 4
         assert widen_if_narrow(d) is d  # healthy: no shuffle added
     finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.files.maxPartitionBytes")
-        else:
-            spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+        spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+        spark.conf.set("spark.sql.shuffle.partitions", prev_width)
 
 
 def test_a05_dropmalformed_complements_corrupt_count(spark, sf_dir):
@@ -1065,72 +1056,6 @@ def test_global_row_number_survives_exchange_reuse_off(spark):
     assert {r["k"]: r["rn"] for r in got} == expected
     assert all(r["n"] == 311 for r in got)
 
-def test_scan_split_estimate_caps_non_splittable_codecs(spark, tmp_path):
-    # ADVICE r9a: a gzip CSV executes as ONE task per file no matter its
-    # size, so the byte-derived estimate must cap at the file count —
-    # otherwise widen_if_narrow would read "healthy" in exactly the
-    # single-task-explode case it exists to catch
-    from csv_to_parquet_aws_datalake_spark.loader import scan_split_estimate
-
-    gz = str(tmp_path / "one_gz")
-    (spark.range(0, 50_000)
-     .selectExpr("id", "repeat('x', 64) AS pad")
-     .coalesce(1).write.option("compression", "gzip").csv(gz))
-    prev = spark.conf.get("spark.sql.files.maxPartitionBytes", None)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "4k")
-    try:
-        df = spark.read.csv(gz)
-        files = [f for f in df.inputFiles() if f.endswith(".gz")]
-        assert files and len(df.inputFiles()) == len(files)
-        # bytes/4k alone would report this healthy; the codec cap must win
-        assert scan_split_estimate(df) == len(files)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.files.maxPartitionBytes")
-        else:
-            spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
-
-
-def test_scan_split_estimate_mixed_directory(spark, tmp_path):
-    # ADVICE r10b: in a directory mixing one oversized gzip file with
-    # many splittable CSV bytes, the estimate must charge the gzip file
-    # exactly one task and the splittable remainder its byte-derived
-    # share — the old whole-directory file-count cap under-reported the
-    # splittable side's parallelism
-    import math
-
-    from csv_to_parquet_aws_datalake_spark.loader import scan_split_estimate
-
-    mixed = tmp_path / "mixed"
-    (spark.range(0, 50_000)
-     .selectExpr("id", "repeat('x', 64) AS pad")
-     .coalesce(1).write.option("compression", "gzip").csv(str(mixed)))
-    (spark.range(0, 50_000)
-     .selectExpr("id", "repeat('y', 64) AS pad")
-     .coalesce(1).write.mode("append").csv(str(mixed)))
-    prev = spark.conf.get("spark.sql.files.maxPartitionBytes", None)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "4k")
-    try:
-        df = spark.read.csv(str(mixed))
-        import os
-        from urllib.parse import unquote, urlparse
-        gz = [f for f in df.inputFiles() if f.endswith(".gz")]
-        plain = [f for f in df.inputFiles() if not f.endswith(".gz")]
-        assert len(gz) == 1 and plain
-        plain_bytes = sum(
-            os.path.getsize(unquote(urlparse(f).path)) for f in plain)
-        # one task for the oversized gzip + byte share for the rest; the
-        # old cap would have returned len(files) == 2 here
-        expect = 1 + math.ceil(plain_bytes / 4096)
-        assert expect > 2
-        assert scan_split_estimate(df) == expect
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.files.maxPartitionBytes")
-        else:
-            spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
-
-
 def test_dsir_weight_guard_fires_past_bigint_headroom(spark):
     # ADVICE r15: the i66 weight product (tt+1)*(rall+B)*SCALE had a
     # documented-but-unenforced BIGINT bound — in a non-ANSI session a
@@ -1699,23 +1624,44 @@ def test_text_builders_on_edge_rows(spark, n):
         for p, g in enumerate(gs))
 
 
-def test_tokenizer_and_ngrams_have_one_owner():
-    # functions/text.py is the only module that decides how text becomes
-    # tokens and tokens become grams; a hand-rolled split or sequence-
-    # indexed transform elsewhere would reopen the short-document trap
+def _balanced(depth: int) -> str:
+    """Regex for one parenthesized group nested at most ``depth`` deep."""
+    group = r"\([^()]*\)"
+    for _ in range(depth - 1):
+        group = rf"\((?:[^()]|{group})*\)"
+    return group
+
+
+@pytest.mark.parametrize("pattern,owner", [
+    # functions/text.py alone decides how text becomes tokens and tokens
+    # become grams; a hand-rolled split or sequence-indexed transform
+    # elsewhere would reopen the short-document trap
+    (r"F\.split\(|(?<![\w.])split\(|transform\(sequence\(",
+     "functions/text.py"),
+    # every plan width is spark.sql.shuffle.partitions; a plan keyed on
+    # the host's core count takes a different branch on every machine
+    # (bracketed so that a grep of the tree does not find this line)
+    (r"default[P]arallelism", None),
+    # a Python lambda's variable is named from a process-wide counter, so
+    # the plan text would depend on what the process built before; SQL
+    # text keeps one fixed name
+    (r"F\.(?:transform|aggregate|filter|transform_values|map_filter"
+     rf"|zip_with)\((?:[^()]|{_balanced(4)})*?\blambda\b", None),
+], ids=["tokenizer", "width", "hof-lambda"])
+def test_idiom_has_one_owner(pattern, owner):
     import re
 
     pkg = os.path.join(_REPO, "csv_to_parquet_aws_datalake_spark")
-    owner = os.path.join(pkg, "functions", "text.py")
-    pattern = re.compile(r"F\.split\(|(?<![\w.])split\(|transform\(sequence\(")
+    rx = re.compile(pattern)
     hits = []
     for root, _, files in os.walk(pkg):
         for f in files:
             path = os.path.join(root, f)
-            if not f.endswith(".py") or path == owner:
+            rel = os.path.relpath(path, pkg)
+            if not f.endswith(".py") or rel == owner:
                 continue
             with open(path, encoding="utf-8") as fh:
-                hits += [f"{os.path.relpath(path, _REPO)}:{i}: {line.strip()}"
-                         for i, line in enumerate(fh, 1)
-                         if pattern.search(line)]
+                src = fh.read()
+            hits += [f"{rel}:{src.count(chr(10), 0, m.start()) + 1}: "
+                     f"{m.group(0)[:80]}" for m in rx.finditer(src)]
     assert not hits, "\n".join(hits)
