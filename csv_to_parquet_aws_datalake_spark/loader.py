@@ -52,17 +52,25 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     cached = _TABLE_CACHE.get(key)
     if cached is not None:
         return cached[1]
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    # untagged parquet timestamp[us] arrives as TIMESTAMP_NTZ when the host
-    # session locked inferTimestampNTZ on; cast back to TimestampType (value-
-    # preserving under the UTC session zone) so every downstream schema and
-    # oracle hash sees microsecond TIMESTAMP regardless of host confs.
-    ntz_cols = [c for c, t in df.dtypes if t == "timestamp_ntz"]
-    for c in ntz_cols:
-        df = df.withColumn(c, F.col(c).cast("timestamp"))
+    df = normalize_timestamps(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
     _TABLE_CACHE[key] = (spark, df)
+    return df
+
+
+def normalize_timestamps(df: DataFrame) -> DataFrame:
+    """Microsecond ``TimestampType`` columns from either driver layout, for
+    a batch read or a stream alike.
+
+    A bigint ``ts`` is the events table's nanosAsLong layout.  Untagged
+    parquet timestamp[us] arrives as TIMESTAMP_NTZ when the host session
+    locked inferTimestampNTZ on; the cast back to TimestampType is
+    value-preserving under the UTC session zone, so every downstream
+    schema and oracle hash sees microsecond TIMESTAMP whatever the host
+    confs."""
+    if dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    for c in [c for c, t in df.dtypes if t == "timestamp_ntz"]:
+        df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df
 
 

@@ -596,12 +596,8 @@ def c18_bloom_semijoin_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
     because its size is bounded by the Bloom GEOMETRY (1024 rows), not
     by the scale factor.  The main join carries NO hint (orders is
     SF-proportional; the planner decides, the c07/j10 rule)."""
-    return bloom_semijoin_agg(load_table(spark, sf_dir, "orders"),
-                              load_table(spark, sf_dir, "lineitem"))
-
-
-def bloom_semijoin_agg(orders: DataFrame, li: DataFrame) -> DataFrame:
-    """The c18 pipeline over explicit (orders, lineitem) frames."""
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     dim = (orders.filter(F.col("o_orderpriority") == "1-URGENT")
            .select("o_orderkey"))
     words = F.broadcast(

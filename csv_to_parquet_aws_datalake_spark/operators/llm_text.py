@@ -88,10 +88,19 @@ def i02_dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# i03's oracle, reused verbatim by i22's cluster oracle so both derive the
-# same near-dup pair set
-_I03_PAIRS_SQL = """
-        WITH toks AS (
+# ---- the near-dup kernel family: shingle sets, signatures, band keys ------
+#
+# One contract, owned here and nowhere else.  A document's shingles are its
+# DISTINCT 3-token shingles; a document under 3 tokens (NULL text included)
+# has none and no row.  MinHash slot k is the min over them of hex digits
+# [8*(k%4)+1, +8) of md5('<k//4>|' || shingle): two md5 calls per shingle
+# yield all 8 32-bit slots, and fixed-width hex makes the lexicographic min
+# both engines compute the numeric min.  Band j's key is
+# md5(s_{2j} || s_{2j+1}): 4 bands x 2 rows.  i03, i04, i34, i68 and j12
+# build on the Spark functions below, and their oracles on the CTE strings.
+
+#: binds toks(doc_id, t) and sh(doc_id, sh), the DuckDB twin of shingle_sets
+SHINGLE_CTES_SQL = """toks AS (
             SELECT doc_id, string_split(text, ' ') AS t FROM documents
             WHERE len(string_split(text, ' ')) >= 3
         ), sh AS (
@@ -99,13 +108,113 @@ _I03_PAIRS_SQL = """
                    unnest(list_transform(range(1, len(t) - 1),
                           i -> array_to_string(t[i:i+2], ' '))) AS sh
             FROM toks
-        ), counts AS (
+        )"""
+
+#: over sh, binds counts(doc_id, n) and pairs(da, db, shared), the DuckDB
+#: twin of shared_shingle_counts
+_SHARED_SHINGLES_CTES_SQL = """counts AS (
             SELECT doc_id, count(*) AS n FROM sh GROUP BY 1
         ), pairs AS (
             SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS shared
             FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
             GROUP BY 1, 2
-        )
+        )"""
+
+
+def _signature_ctes_sql() -> str:
+    mins = ",\n                   ".join(
+        f"min(substr(h{k // 4}, {(k % 4) * 8 + 1}, 8)) AS s{k}"
+        for k in range(8))
+    bands = "\n            UNION ALL ".join(
+        f"SELECT doc_id, {j} AS b, md5(s{2*j} || s{2*j+1}) AS bk FROM sig"
+        for j in range(4))
+    return f"""hashed AS (
+            SELECT doc_id, md5('0|' || sh) AS h0, md5('1|' || sh) AS h1
+            FROM sh
+        ), sig AS (
+            SELECT doc_id,
+                   {mins}
+            FROM hashed GROUP BY 1
+        ), bands AS (
+            {bands}
+        )"""
+
+
+#: over sh, binds sig(doc_id, s0..s7) and bands(doc_id, b, bk), the DuckDB
+#: twin of minhash_signatures and band_keys
+SIGNATURE_CTES_SQL = _signature_ctes_sql()
+
+
+def shingle_sets(d: DataFrame) -> DataFrame:
+    """(doc_id, sha, n): each document's distinct-shingle array and its
+    size, from any (doc_id, text, ...) frame.  The count is a map-side
+    size(), not an explode + groupBy(doc_id) re-group, and a caller that
+    pins this frame pins one array row per document, not one row per
+    shingle."""
+    return (d.withColumn("t", tokens()).filter(F.size("t") >= 3)
+            .select("doc_id", F.array_distinct(ngrams("t", 3)).alias("sha"))
+            .withColumn("n", F.size("sha")))
+
+
+def shared_shingle_counts(sets: DataFrame) -> DataFrame:
+    """(da, db, shared) for every document pair da < db with at least one
+    shingle in common, over a :func:`shingle_sets` frame.  Candidates come
+    from an equi-join on the shingle, so only documents sharing one are
+    ever compared.  Both join sides explode ``sets``; callers pin it."""
+    sh = sets.select("doc_id", F.explode("sha").alias("sh"))
+    return (
+        sh.alias("a")
+        .join(sh.alias("b"),
+              (F.col("a.sh") == F.col("b.sh"))
+              & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .groupBy(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
+        .agg(F.count(F.lit(1)).alias("shared"))
+    )
+
+
+def minhash_signatures(d: DataFrame) -> DataFrame:
+    """(doc_id, s0..s7) MinHash signatures of any (doc_id, text, ...)
+    frame, batch or stream.
+
+    Every shingle of a document is already in ONE row, so each slot's min
+    is an array aggregation (array_min over a substring view of the md5
+    arrays), not an explode + re-group: it needs no shuffle and no state,
+    so the same expressions run inside any micro-batch.  The md5 arrays
+    are built once per row in their own projection: CollapseProject keeps
+    multiply-referenced non-cheap expressions un-inlined, so each md5
+    runs exactly once per shingle (tests/test_plans.py::
+    test_minhash_signature_md5_runs_once pins it)."""
+    hashed = shingle_sets(d).select(
+        "doc_id",
+        F.expr("transform(sha, s -> md5(concat('0|', s)))").alias("h0"),
+        F.expr("transform(sha, s -> md5(concat('1|', s)))").alias("h1"),
+    )
+    return hashed.select("doc_id", *[
+        F.array_min(F.expr(
+            f"transform(h{k // 4}, x -> substring(x, {(k % 4) * 8 + 1}, 8))"
+        )).alias(f"s{k}")
+        for k in range(8)
+    ])
+
+
+def band_keys(sig: DataFrame) -> DataFrame:
+    """(doc_id, b, bk): the 4 LSH band keys of each signature row, emitted
+    by one explode pass (the same rows as a 4-arm union, one scan)."""
+    return sig.select(
+        "doc_id",
+        F.explode(F.array(*[
+            F.struct(
+                F.lit(j).alias("b"),
+                F.md5(F.concat(F.col(f"s{2*j}"), F.col(f"s{2*j+1}"))).alias("bk"))
+            for j in range(4)
+        ])).alias("band"),
+    ).select("doc_id", "band.b", "band.bk")
+
+
+# i03's oracle, reused verbatim by i22's cluster oracle so both derive the
+# same near-dup pair set
+_I03_PAIRS_SQL = f"""
+        WITH {SHINGLE_CTES_SQL}, {_SHARED_SHINGLES_CTES_SQL}
         SELECT da, db,
                round(shared * 1.0 / (ca.n + cb.n - shared), 6) AS jac
         FROM pairs
@@ -137,28 +246,14 @@ def shingle_jaccard_pairs(d: DataFrame) -> DataFrame:
     all share their arithmetic with the oracle (the both-engines-wrong
     class), so they get a from-scratch pure-Python recomputation.
 
-    Shape: the pinned frame holds one row per doc with the distinct-
-    shingle ARRAY and its size — per-doc counts are a map-side
-    size(array_distinct(...)), not an explode + groupBy(doc_id) re-group
-    (the i34 array-aggregation rationale), and the checkpoint pins 5 K
-    array rows instead of 260 K exploded rows.  The explode to shingle
-    rows happens twice downstream (both self-join sides), but over the
-    pinned arrays it is a cheap generator, not a recompute of the
-    split/shingle work."""
-    docs = d.withColumn("t", tokens()).filter(F.size("t") >= 3)
-    base = (docs.select("doc_id",
-                        F.array_distinct(ngrams("t", 3)).alias("sha"))
-            .withColumn("n", F.size("sha"))
-            .localCheckpoint())  # reused 3x (counts + both join sides)
+    The pinned frame holds one row per doc with the distinct-shingle
+    array and its size (5 K array rows instead of 260 K exploded rows);
+    the explode to shingle rows happens on both self-join sides, a cheap
+    generator over the pinned arrays, not a recompute of the shingling."""
+    base = shingle_sets(d).localCheckpoint()  # reused 3x (counts + both
+    #                                           join sides)
     counts = base.select("doc_id", "n")
-    sh = base.select("doc_id", F.explode("sha").alias("sh"))
-    pairs = (
-        sh.alias("a")
-        .join(sh.alias("b"),
-              (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
+    pairs = shared_shingle_counts(base)
     jac = F.round(
         F.col("shared") / (F.col("ca.n") + F.col("cb.n") - F.col("shared")), 6)
     return (
@@ -318,13 +413,8 @@ def i04_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
     d = widen_if_narrow(load_table(spark, sf_dir, "documents"), "doc_id")
-    docs = (
-        d.withColumn("t", tokens())
-        .filter(F.size("t") >= 3)
-        .withColumn("sh", F.array_distinct(ngrams("t", 3)))
-        .select("doc_id", "sh")
-    )
-    tf = HashingTF(inputCol="sh", outputCol="features",
+    docs = shingle_sets(d).select("doc_id", "sha")
+    tf = HashingTF(inputCol="sha", outputCol="features",
                    numFeatures=1 << 18, binary=True)
     # pin the feature build: approxSimilarityJoin consumes it as BOTH join
     # sides (plus the fit), and unpinned each consumer re-runs the full
@@ -354,21 +444,15 @@ def i04_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def i07_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        token_tf_df(load_table(spark, sf_dir, "documents"))
-        .orderBy(F.desc("tf"), "tok")
-        .limit(30)
-    )
-
-
-def token_tf_df(d: DataFrame) -> DataFrame:
-    """The i07 kernel over any (doc_id, text, ...) frame: corpus-wide term
-    and document frequencies (the vocabulary-build aggregate); i07 adds
-    the bounded top-30 TakeOrdered on the result."""
+    """Corpus-wide term and document frequencies (the vocabulary-build
+    aggregate), cut to a bounded top-30 TakeOrdered."""
+    d = load_table(spark, sf_dir, "documents")
     return (
         d.select("doc_id", F.explode(tokens()).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("tf"), F.countDistinct("doc_id").alias("df"))
+        .orderBy(F.desc("tf"), "tok")
+        .limit(30)
     )
 
 
@@ -395,12 +479,7 @@ def i08_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     so it stays a shuffle join on term.  The corpus size N enters as a
     broadcast 1-row aggregate (not a driver-side count), so the whole query
     is a single lazy job."""
-    return tfidf_top_terms(load_table(spark, sf_dir, "documents"))
-
-
-def tfidf_top_terms(d: DataFrame) -> DataFrame:
-    """The i08 kernel over any (doc_id, text, ...) frame: each document's
-    top 3 terms."""
+    d = load_table(spark, sf_dir, "documents")
     n_docs = F.broadcast(d.agg(F.count(F.lit(1)).alias("nd")))
     tok = d.select("doc_id", F.explode(tokens()).alias("tok"))
     # pin tf: both the score join and the df aggregate consume it, and
@@ -925,12 +1004,8 @@ def i56_gopher_rule_breakdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     final source rollup with map-side partial aggregation.  Mean word
     length is an exact integer sum divided once, identical cross-engine;
     the rule thresholds compare that one double the same way on both."""
-    d = load_table(spark, sf_dir, "documents")
-    return gopher_rule_breakdown(d.filter(F.col("text").isNotNull()))
-
-
-def gopher_rule_breakdown(d: DataFrame) -> DataFrame:
-    """The i56 kernel over any (source, text) frame."""
+    d = (load_table(spark, sf_dir, "documents")
+         .filter(F.col("text").isNotNull()))
     m = (d.select("source", tokens().alias("toks"))
          .selectExpr(
              "source",
@@ -1337,56 +1412,29 @@ def i33_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _i34_sig_sql() -> str:
-    # slot k = min over shingles of hex digits [8*(k%4)+1, +8) of
-    # md5(seed(k//4) || shingle): two md5 calls per shingle yield all 8
-    # 32-bit slots (fixed-width hex, so lexicographic min == numeric min)
-    mins = ",\n                   ".join(
-        f"min(substr(h{k // 4}, {(k % 4) * 8 + 1}, 8)) AS s{k}"
-        for k in range(8))
-    bands = "\n            UNION ALL ".join(
-        f"SELECT doc_id, {j} AS b, md5(s{2*j} || s{2*j+1}) AS bk FROM sig"
-        for j in range(4))
-    matches = " + ".join(
-        f"(CASE WHEN sa.s{k} = sb.s{k} THEN 1 ELSE 0 END)" for k in range(8))
-    return f"""
-        WITH toks AS (
-            SELECT doc_id, string_split(text, ' ') AS t FROM documents
-            WHERE len(string_split(text, ' ')) >= 3
-        ), sh AS (
-            SELECT DISTINCT doc_id,
-                   unnest(list_transform(range(1, len(t) - 1),
-                          i -> array_to_string(t[i:i+2], ' '))) AS sh
-            FROM toks
-        ), hashed AS (
-            SELECT doc_id, md5('0|' || sh) AS h0, md5('1|' || sh) AS h1
-            FROM sh
-        ), sig AS (
-            SELECT doc_id,
-                   {mins}
-            FROM hashed GROUP BY 1
-        ), bands AS (
-            {bands}
-        ), cand AS (
+# i34's oracle: candidate pairs (da < db) sharing any band key, with their
+# count of agreeing slots; i68's oracle reads it as its candidate set
+_I34_PAIRS_SQL = f"""
+        WITH {SHINGLE_CTES_SQL}, {SIGNATURE_CTES_SQL}, cand AS (
             SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
             FROM bands a JOIN bands b
               ON a.b = b.b AND a.bk = b.bk AND a.doc_id < b.doc_id
         )
-        SELECT da, db, {matches} AS n_sig_match
+        SELECT da, db, {" + ".join(
+            f"(CASE WHEN sa.s{k} = sb.s{k} THEN 1 ELSE 0 END)"
+            for k in range(8))} AS n_sig_match
         FROM cand
         JOIN sig sa ON da = sa.doc_id
         JOIN sig sb ON db = sb.doc_id
-    """
+"""
 
 
-@query("i34_minhash_banding", oracle=_i34_sig_sql())
+@query("i34_minhash_banding", oracle=_I34_PAIRS_SQL)
 def i34_minhash_banding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + LSH banding built from first principles with a
-    cross-engine-deterministic hash: signature slot k is the min over
-    shingles of a 32-bit (8-hex-digit) substring of md5(seed || shingle)
-    — two md5 calls per shingle yield all 8 slots (fixed-width hex, so
-    the lexicographic min both engines compute IS the numeric min), 4x
-    less hashing than one digest per slot for the CPU-bound step — and
+    cross-engine-deterministic hash (the slot and band contract above
+    `shingle_sets`): two md5 calls per shingle yield all 8 slots, 4x
+    less hashing than one digest per slot for the CPU-bound step, and
     unlike i04's engine-seeded MinHashLSH the pipeline is fully
     oracle-checkable.
     4 bands x 2 rows: documents agreeing on any band key become candidate
@@ -1403,43 +1451,6 @@ def i34_minhash_banding(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_band_pairs(widen_if_narrow(d, "doc_id"))
 
 
-def _minhash_signatures(d: DataFrame) -> DataFrame:
-    """(doc_id, s0..s7) MinHash signatures — the pre-checkpoint signature
-    frame of minhash_band_pairs, factored out so the
-    md5-once property below is pinned by a PLAN test
-    (tests/test_plans.py::test_minhash_signature_md5_runs_once), not a
-    comment: the checkpoint in the caller would otherwise hide this
-    subplan from every explain.
-
-    Signature slots are min-over-shingles, and every shingle of a doc is
-    already in ONE row — so the min is an ARRAY aggregation, not an
-    explode + re-group (guide §2.4 "remove shuffles outright"):
-    the md5 arrays are built once per row in their own projection
-    (CollapseProject keeps multiply-referenced non-cheap expressions
-    un-inlined, so each md5 runs exactly once per shingle), then each
-    slot is an array_min over a substring view.  Same math as the
-    exploded form — min over rows == min over the array — with zero
-    shingle-row amplification and no doc_id hash-agg; the former
-    explode+groupBy paid one 8-way min hash-agg update per shingle ROW
-    (0.97 s -> 0.79 s end-to-end at sf0.1)."""
-    docs = d.withColumn("t", tokens()).filter(F.size("t") >= 3)
-    hashed = (
-        docs.select("doc_id",
-                    F.array_distinct(ngrams("t", 3)).alias("sh"))
-        .select(
-            "doc_id",
-            F.expr("transform(sh, s -> md5(concat('0|', s)))").alias("h0"),
-            F.expr("transform(sh, s -> md5(concat('1|', s)))").alias("h1"),
-        )
-    )
-    return hashed.select("doc_id", *[
-        F.array_min(F.expr(
-            f"transform(h{k // 4}, x -> substring(x, {(k % 4) * 8 + 1}, 8))"
-        )).alias(f"s{k}")
-        for k in range(8)
-    ])
-
-
 def minhash_band_pairs(d: DataFrame) -> DataFrame:
     """The i34 kernel over any (doc_id, text, ...) frame.
 
@@ -1448,19 +1459,9 @@ def minhash_band_pairs(d: DataFrame) -> DataFrame:
     exact-duplicate pair is emitted with n_sig_match = 8 — banding has no
     false negatives on exact duplicates (only near-dups are probabilistic).
     """
-    sig = _minhash_signatures(d).localCheckpoint()  # reused 3x (band
-    #                                  explode + both pair sides)
-    # one explode pass emits all 4 (band, key) rows per doc — same rows as
-    # a 4-arm union but a single scan of the pinned signatures
-    bands = sig.select(
-        "doc_id",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(j).alias("b"),
-                F.md5(F.concat(F.col(f"s{2*j}"), F.col(f"s{2*j+1}"))).alias("bk"))
-            for j in range(4)
-        ])).alias("band"),
-    ).select("doc_id", "band.b", "band.bk")
+    sig = minhash_signatures(d).localCheckpoint()  # reused 3x (band
+    #                                 explode + both pair sides)
+    bands = band_keys(sig)
     cand = (
         bands.alias("a")
         .join(bands.alias("b"),
@@ -2099,13 +2100,8 @@ def i65_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     token array — no explode, no (doc, token) shuffle, ZERO exchanges;
     the 100 TB cost is one scan+project.  NULL-text docs excluded by
     contract on both engines (the r12 convention)."""
-    d = load_table(spark, sf_dir, "documents")
-    return quality_classifier_scores(d.filter(F.col("text").isNotNull()))
-
-
-def quality_classifier_scores(d: DataFrame) -> DataFrame:
-    """The i65 kernel over any (doc_id, text) frame; callers pre-filter
-    NULL text (the registered wrapper's contract)."""
+    d = (load_table(spark, sf_dir, "documents")
+         .filter(F.col("text").isNotNull()))
     w = ("(locate(substring(h, 1, 1), '0123456789abcdef') - 1) * 16"
          " + (locate(substring(h, 2, 1), '0123456789abcdef') - 1) - 128")
     return (
@@ -2313,53 +2309,14 @@ def i64_bm25_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- i68: LSH calibration census (estimated vs exact Jaccard) --------------
 
-def _i68_oracle() -> str:
-    mins = ",\n                   ".join(
-        f"min(substr(h{k // 4}, {(k % 4) * 8 + 1}, 8)) AS s{k}"
-        for k in range(8))
-    bands = "\n            UNION ALL ".join(
-        f"SELECT doc_id, {j} AS b, md5(s{2*j} || s{2*j+1}) AS bk FROM sig"
-        for j in range(4))
-    slots = " + ".join(
-        f"CASE WHEN sa.s{k} = sb.s{k} THEN 1 ELSE 0 END" for k in range(8))
-    return f"""
-        WITH toks AS (
-            SELECT doc_id, string_split(text, ' ') AS t FROM documents
-            WHERE len(string_split(text, ' ')) >= 3
-        ), sh AS (
-            SELECT DISTINCT doc_id,
-                   unnest(list_transform(range(1, len(t) - 1),
-                          i -> array_to_string(t[i:i+2], ' '))) AS sh
-            FROM toks
-        ), hashed AS (
-            SELECT doc_id, md5('0|' || sh) AS h0, md5('1|' || sh) AS h1
-            FROM sh
-        ), sig AS (
-            SELECT doc_id, {mins}
-            FROM hashed GROUP BY 1
-        ), bands AS (
-            {bands}
-        ), cand AS (
-            SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-            FROM bands a JOIN bands b
-              ON a.b = b.b AND a.bk = b.bk AND a.doc_id < b.doc_id
-        ), m AS (
-            SELECT da, db, ({slots}) AS n_sig_match
-            FROM cand
-            JOIN sig sa ON da = sa.doc_id
-            JOIN sig sb ON db = sb.doc_id
-        ), counts AS (
-            SELECT doc_id, count(*) AS n FROM sh GROUP BY 1
-        ), shared AS (
-            SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS shared
-            FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-            GROUP BY 1, 2
-        ), jx AS (
+_I68_ORACLE_SQL = f"""
+        WITH {SHINGLE_CTES_SQL}, {_SHARED_SHINGLES_CTES_SQL},
+        m AS ({_I34_PAIRS_SQL}), jx AS (
             SELECT m.n_sig_match,
-                   (coalesce(s.shared, 0) * 1000000)
-                     // (ca.n + cb.n - coalesce(s.shared, 0)) AS jacc_e6
+                   (coalesce(p.shared, 0) * 1000000)
+                     // (ca.n + cb.n - coalesce(p.shared, 0)) AS jacc_e6
             FROM m
-            LEFT JOIN shared s ON m.da = s.da AND m.db = s.db
+            LEFT JOIN pairs p ON m.da = p.da AND m.db = p.db
             JOIN counts ca ON m.da = ca.doc_id
             JOIN counts cb ON m.db = cb.doc_id
         )
@@ -2369,7 +2326,7 @@ def _i68_oracle() -> str:
                CAST(min(jacc_e6) AS BIGINT) AS min_jacc_e6,
                CAST(max(jacc_e6) AS BIGINT) AS max_jacc_e6
         FROM jx GROUP BY 1
-    """
+"""
 
 
 # cap under which i68's candidate-id set is force-broadcast: 2M pairs
@@ -2393,13 +2350,10 @@ def lsh_calibration_frame(d: DataFrame) -> DataFrame:
     1.13M (da, db) groups, of which the calibration join keeps 759 (a
     1500x overcompute), and the corpus-wide self-join on the shingle key
     is quadratic in hot-shingle frequency (the exact blowup the banding
-    exists to avoid).  So the candidate doc ids (bounded by the banding collision count, the
-    quantity LSH keeps sublinear by design) are semi-joined into the
-    corpus FIRST, so the shingle explode, the per-doc counts, and the
-    pairwise-intersection self-join all run over candidate docs only.
-    Per-doc shingle counts come from a map-side size(array_distinct(...)),
-    not an explode + groupBy(doc_id) re-group (the rationale of i34's
-    array-min signatures)."""
+    exists to avoid).  So the candidate doc ids (bounded by the banding
+    collision count, the quantity LSH keeps sublinear by design) are
+    semi-joined into the corpus FIRST, so the shingle sets, their counts
+    and i03's shared-shingle self-join all run over candidate docs only."""
     pairs = minhash_band_pairs(d).localCheckpoint()  # reused: ids + join
     cand_ids = (pairs.select(F.col("da").alias("doc_id"))
                 .union(pairs.select(F.col("db").alias("doc_id"))).distinct())
@@ -2412,25 +2366,11 @@ def lsh_calibration_frame(d: DataFrame) -> DataFrame:
     if pairs.count() <= _I68_BROADCAST_MAX_PAIRS:
         cand_ids = F.broadcast(cand_ids)
 
-    docs = d.withColumn("t", tokens()).filter(F.size("t") >= 3)
-    cand_docs = (
-        docs.join(cand_ids, "doc_id", "left_semi")
-        .select("doc_id", F.array_distinct(ngrams("t", 3)).alias("sha"))
-        .withColumn("n", F.size("sha"))
-        .localCheckpoint()  # candidates only — tiny; reused 3x
-    )
+    cand_docs = (shingle_sets(d.join(cand_ids, "doc_id", "left_semi"))
+                 .localCheckpoint())  # candidates only — tiny; reused 3x
     counts = cand_docs.select("doc_id", "n")
-    sh = cand_docs.select("doc_id", F.explode("sha").alias("sh"))
-    shared = (
-        sh.alias("a")
-        .join(sh.alias("b"),
-              (F.col("a.sh") == F.col("b.sh"))
-              & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
     jx = (
-        pairs.join(shared, ["da", "db"], "left")
+        pairs.join(shared_shingle_counts(cand_docs), ["da", "db"], "left")
         .withColumn("shared", F.coalesce(F.col("shared"), F.lit(0)))
         .join(counts.alias("ca"), F.col("da") == F.col("ca.doc_id"))
         .join(counts.alias("cb"), F.col("db") == F.col("cb.doc_id"))
@@ -2446,7 +2386,7 @@ def lsh_calibration_frame(d: DataFrame) -> DataFrame:
         F.max("jacc_e6").alias("max_jacc_e6"))
 
 
-@query("i68_lsh_calibration", oracle=_i68_oracle())
+@query("i68_lsh_calibration", oracle=_I68_ORACLE_SQL)
 def i68_lsh_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH calibration census: for every banding CANDIDATE pair, compare
     the signature-side similarity estimate (n_sig_match of 8 slots —
@@ -2457,9 +2397,10 @@ def i68_lsh_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     repo cites as "the LSH knob") and the empirical form of the MinHash
     identity E[slot agreement] = J.  Composes the two REGISTERED
     kernels rather than forking them: candidates + slot counts from
-    i34's `minhash_band_pairs`, exact Jaccard in the i03 shape (shared
-    shingles via equi-join, never all-pairs), held in e6 fixed point so
-    the mean is an integer division — no float is ever aggregated.
+    i34's `minhash_band_pairs`, exact Jaccard from i03's
+    `shared_shingle_counts` (shared shingles via equi-join, never
+    all-pairs), held in e6 fixed point so the mean is an integer
+    division — no float is ever aggregated.
 
     A band-key collision between docs sharing ZERO shingles is
     astronomically unlikely but handled: the shared-shingle join is a

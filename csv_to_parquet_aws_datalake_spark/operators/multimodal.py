@@ -568,12 +568,6 @@ def k17_phash_band_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.filter(F.length("text") >= 8)
         .select("doc_id", F.encode("text", "utf-8").alias("payload")))
     codes = phash_codes(binary).localCheckpoint()  # pin: both join sides
-    return phash_band_pairs(codes)
-
-
-def phash_band_pairs(codes: DataFrame) -> DataFrame:
-    """The banding kernel of k17 (its caller) over any (doc_id, phash)
-    frame.  Callers pin ``codes``: both join sides consume it."""
     bands = codes.selectExpr(
         "doc_id", "phash",
         "stack(2, 0, phash div 16, 1, pmod(phash, 16)) AS (band, bval)")

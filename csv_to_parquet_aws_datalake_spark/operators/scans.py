@@ -54,6 +54,15 @@ _ROUNDTRIP_ORACLE = """
 """
 
 
+def _roundtrip_agg(li: DataFrame) -> DataFrame:
+    """The Spark twin of _ROUNDTRIP_ORACLE over a read-back lineitem."""
+    return li.groupBy("l_returnflag").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
+        F.round(F.sum("l_extendedprice"), 2).alias("sum_price"),
+    )
+
+
 @query("a02_csv_roundtrip", oracle=_ROUNDTRIP_ORACLE)
 def a02_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's flagship path: parquet -> CSV (raw zone) -> declared-
@@ -70,11 +79,7 @@ def a02_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .csv(csv_dir))
     back.write.mode("overwrite").parquet(pq_dir)
     curated = spark.read.parquet(pq_dir)
-    return curated.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-        F.round(F.sum("l_extendedprice"), 2).alias("sum_price"),
-    )
+    return _roundtrip_agg(curated)
 
 
 @query(
@@ -296,11 +301,7 @@ def a08_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = scratch_dir("a08", sf_dir, "orc")
     li.write.mode("overwrite").orc(out)
     back = spark.read.orc(out)
-    return back.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-        F.round(F.sum("l_extendedprice"), 2).alias("sum_price"),
-    )
+    return _roundtrip_agg(back)
 
 
 @query(
@@ -351,11 +352,7 @@ def a11_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not (n_comp <= 4 < n_frag):
         raise AssertionError(f"compaction failed: {n_frag} -> {n_comp} files")
     back = spark.read.parquet(compact)
-    return back.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-        F.round(F.sum("l_extendedprice"), 2).alias("sum_price"),
-    )
+    return _roundtrip_agg(back)
 
 
 @query(
@@ -486,11 +483,7 @@ def a16_csv_gzip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     back = (spark.read.schema(LINEITEM)
             .options(header=True, timestampFormat=_TS_FMT)
             .csv(csv_dir))
-    return back.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-        F.round(F.sum("l_extendedprice"), 2).alias("sum_price"),
-    )
+    return _roundtrip_agg(back)
 
 
 @query(

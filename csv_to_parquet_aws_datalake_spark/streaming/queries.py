@@ -28,8 +28,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.text import ngrams, tokens
-from ..loader import load_table
+from ..loader import load_table, normalize_timestamps
+from ..operators.llm_text import (
+    SHINGLE_CTES_SQL,
+    SIGNATURE_CTES_SQL,
+    band_keys,
+    minhash_signatures,
+)
 from ..registry import query
 from ..session import configure
 from ..sources.io_paths import schedule_tag, scratch_dir
@@ -47,15 +52,11 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         except OSError:
             shutil.copyfile(src, dst)
     # readStream needs an explicit schema; take it from the file footer so the
-    # stream tracks the driver's physical layout (timestamp[ns]-as-long in
-    # early rounds, untagged timestamp[us] now) instead of hardcoding one.
+    # stream tracks the driver's physical layout, which the loader then
+    # normalizes exactly as it does the batch table
     raw_schema = spark.read.parquet(src).schema
-    raw = spark.readStream.schema(raw_schema).parquet(stream_dir)
-    if dict(raw.dtypes).get("ts") == "bigint":  # nanosAsLong layout
-        raw = raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    elif dict(raw.dtypes).get("ts") == "timestamp_ntz":
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+    return normalize_timestamps(
+        spark.readStream.schema(raw_schema).parquet(stream_dir))
 
 
 def _run_to_memory(agg: DataFrame, name: str, mode: str,
@@ -791,7 +792,7 @@ def j10_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     drains everything in one batch, so the batch join+groupBy is the
     oracle."""
     ev = _events_stream(spark, sf_dir)
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment")
     joined = ev.join(cust, ev.user_id == cust.c_custkey)
     agg = (joined.groupBy("c_mktsegment")
@@ -801,23 +802,6 @@ def j10_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---- j12: streaming near-dup ingest check (stream-vs-corpus LSH) ----------
-
-def _row_sig_cols() -> list[str]:
-    """Per-ROW MinHash signature expressions over the distinct-shingle
-    array ``shd`` — the i34 slot contract (slot k = min over distinct
-    shingles of hex digits [8*(k%4)+1, +8) of md5(seed(k//4) || shingle))
-    restated as map-side higher-order functions: a STREAM cannot run
-    i34's shingle-explode + groupBy-min (a per-doc streaming aggregation
-    would need watermark state), but min-over-a-row's-own-shingles needs
-    no aggregation at all — array_min(transform(...)) is stateless, so
-    the signature computes inside any micro-batch.  Equality with the
-    registered kernel's groupBy formulation is pinned in tests."""
-    return [
-        f"array_min(transform(shd, sh -> substring(md5(concat('{k // 4}|',"
-        f" sh)), {(k % 4) * 8 + 1}, 8))) AS s{k}"
-        for k in range(8)
-    ]
-
 
 #: re-keying offset for the simulated re-crawl batch: src19 documents
 #: re-submitted under new ids, so every batch doc is GUARANTEED to
@@ -832,69 +816,21 @@ def _row_sig_cols() -> list[str]:
 _J12_REKEY = 1 << 40
 
 
-
-def j12_bands_frame(frame: DataFrame) -> DataFrame:
-    """(doc_id, b, bk) LSH band keys of a (doc_id, text) frame via the
-    per-ROW signature formulation — stateless map-side expressions, so
-    it applies unchanged to a STREAM (no aggregation before the band
-    join) and to the static corpus side; the batch-twin plan pin in
-    tests/test_r17_queries.py builds on it too."""
-    sig = (frame
-           .withColumn("t", tokens())
-           .filter(F.size("t") >= 3)
-           .withColumn("shd", F.array_distinct(ngrams("t", 3)))
-           .selectExpr("doc_id", *_row_sig_cols()))
-    return sig.select(
-        "doc_id",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(j).alias("b"),
-                F.md5(F.concat(F.col(f"s{2*j}"),
-                               F.col(f"s{2*j+1}"))).alias("bk"))
-            for j in range(4)
-        ])).alias("band"),
-    ).select("doc_id", "band.b", "band.bk")
-
-
-def _j12_oracle() -> str:
-    mins = ",\n                   ".join(
-        f"min(substr(h{k // 4}, {(k % 4) * 8 + 1}, 8)) AS s{k}"
-        for k in range(8))
-    bands = "\n            UNION ALL ".join(
-        f"SELECT doc_id, source, {j} AS b, md5(s{2*j} || s{2*j+1}) AS bk"
-        f" FROM sig" for j in range(4))
-    return f"""
-        WITH toks AS (
-            SELECT doc_id, source, string_split(text, ' ') AS t
-            FROM documents
-            WHERE text IS NOT NULL
-              AND len(string_split(text, ' ')) >= 3
-        ), sh AS (
-            SELECT DISTINCT doc_id, source,
-                   unnest(list_transform(range(1, len(t) - 1),
-                          i -> array_to_string(t[i:i+2], ' '))) AS sh
-            FROM toks
-        ), hashed AS (
-            SELECT doc_id, source, md5('0|' || sh) AS h0,
-                   md5('1|' || sh) AS h1
-            FROM sh
-        ), sig AS (
-            SELECT doc_id, source,
-                   {mins}
-            FROM hashed GROUP BY 1, 2
-        ), bands AS (
-            {bands}
-        )
+# j12's bands carry no source; the batch side's src19 slice is joined from
+# documents in the tail
+_J12_ORACLE_SQL = f"""
+        WITH {SHINGLE_CTES_SQL}, {SIGNATURE_CTES_SQL}
         SELECT n.doc_id + {_J12_REKEY} AS batch_doc,
                c.doc_id AS corpus_doc,
                CAST(count(*) AS BIGINT) AS n_band_hits
-        FROM bands n JOIN bands c ON n.b = c.b AND n.bk = c.bk
-        WHERE n.source = 'src19'
+        FROM bands n
+        JOIN documents d ON n.doc_id = d.doc_id AND d.source = 'src19'
+        JOIN bands c ON n.b = c.b AND n.bk = c.bk
         GROUP BY 1, 2
-    """
+"""
 
 
-@query("j12_stream_neardup_ingest", oracle=_j12_oracle(), streaming=True)
+@query("j12_stream_neardup_ingest", oracle=_J12_ORACLE_SQL, streaming=True)
 def j12_stream_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup-on-ingest: a STREAMED batch of re-crawled documents (the
     i35 convention's src19 slice, re-submitted under new ids — the
@@ -910,10 +846,10 @@ def j12_stream_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Mechanics: the corpus side's (band, key) frame is computed ONCE in
     batch and pinned (localCheckpoint — a stream-static join re-reads
     the static side every micro-batch, so an unpinned plan would
-    re-shingle the whole corpus per trigger); the stream side computes
-    per-row signatures with the map-side `_row_sig_cols` formulation
-    (no streaming aggregation — see its docstring), explodes its 4
-    band keys statelessly, inner-joins the static bands, and counts
+    re-shingle the whole corpus per trigger); the stream side runs the
+    same `minhash_signatures` and `band_keys` kernels as i34, whose
+    per-row array form needs no aggregation and so no streaming state,
+    inner-joins the static bands, and counts
     band hits per (batch_doc, corpus_doc) as a complete-mode streaming
     aggregation drained through availableNow in 2 micro-batches
     (row-number-parity file split, maxFilesPerTrigger=1 — the count state
@@ -928,7 +864,7 @@ def j12_stream_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the j04/r15 tuning contract)."""
     d = (load_table(spark, sf_dir, "documents")
          .filter(F.col("text").isNotNull()))
-    corpus_bands = j12_bands_frame(d).localCheckpoint()
+    corpus_bands = band_keys(minhash_signatures(d)).localCheckpoint()
 
     # fixture identity tracks the schedule constants (ADVICE r15): any
     # edit to the rekey offset, source slice, or split scheme lands in a
@@ -959,7 +895,7 @@ def j12_stream_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = (spark.readStream.schema("doc_id long, text string")
               .option("maxFilesPerTrigger", 1).parquet(src))
-    hits = (j12_bands_frame(stream)
+    hits = (band_keys(minhash_signatures(stream))
             .withColumnRenamed("doc_id", "batch_doc")
             .join(corpus_bands.withColumnRenamed("doc_id", "corpus_doc"),
                   ["b", "bk"])

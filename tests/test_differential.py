@@ -244,7 +244,7 @@ def test_j12_batch_twin_matches_oracle_with_null_text(spark):
     # NULL-text contract covered only by the one-time registration
     # probe recorded in SURVEY §7.16; this pins it PER RUN through the
     # drain-free batch twin (ADVICE r17): the identical band pipeline —
-    # same j12_bands_frame kernel, same re-keyed src19 batch side —
+    # same signature and band kernels, same re-keyed src19 batch side —
     # built in batch over the null-docs fixture, WITHOUT the registered
     # fn's explicit isNotNull pre-filter, must still match the oracle
     # (whose WHERE text IS NOT NULL is the contract): a NULL text
@@ -253,10 +253,11 @@ def test_j12_batch_twin_matches_oracle_with_null_text(spark):
     from pyspark.sql import functions as F
 
     from csv_to_parquet_aws_datalake_spark.loader import load_table
-    from csv_to_parquet_aws_datalake_spark.streaming.queries import (
-        _J12_REKEY,
-        j12_bands_frame,
+    from csv_to_parquet_aws_datalake_spark.operators.llm_text import (
+        band_keys,
+        minhash_signatures,
     )
+    from csv_to_parquet_aws_datalake_spark.streaming.queries import _J12_REKEY
     from tests.differential import make_oracle_con
 
     ndir = _null_docs_dir()
@@ -265,7 +266,7 @@ def test_j12_batch_twin_matches_oracle_with_null_text(spark):
     # CORPUS side (the doc_id % 20 == 7 stripe spans all sources; at
     # sf0.001 it happens to miss the src19 batch slice, so the corpus
     # side is the one this twin exercises — both sides run the same
-    # j12_bands_frame kernel)
+    # kernels)
     nulls = d.filter(F.col("text").isNull())
     assert nulls.count() > 0
     # ...and the layout claim itself is ASSERTED, not just commented
@@ -276,11 +277,12 @@ def test_j12_batch_twin_matches_oracle_with_null_text(spark):
         "null-docs fixture now carries NULL text inside the src19 batch "
         "slice — the twin would exercise the batch side, not the corpus "
         "side this pin documents; re-derive the layout comment above")
-    corpus = j12_bands_frame(d).withColumnRenamed("doc_id", "corpus_doc")
+    corpus = (band_keys(minhash_signatures(d))
+              .withColumnRenamed("doc_id", "corpus_doc"))
     batch = (d.filter(F.col("source") == "src19")
              .select((F.col("doc_id") + _J12_REKEY).alias("doc_id"),
                      "text"))
-    twin = (j12_bands_frame(batch)
+    twin = (band_keys(minhash_signatures(batch))
             .withColumnRenamed("doc_id", "batch_doc")
             .join(corpus, ["b", "bk"])
             .groupBy("batch_doc", "corpus_doc")

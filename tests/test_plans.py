@@ -173,13 +173,13 @@ def test_minhash_signature_md5_runs_once(spark):
     # pre-checkpoint signature frame must contain exactly the two
     # md5-bearing transforms (h0, h1), not eight inlined copies.
     from csv_to_parquet_aws_datalake_spark.operators.llm_text import (
-        _minhash_signatures,
+        minhash_signatures,
     )
 
     d = spark.createDataFrame(
         [(1, "a b c d e"), (2, "b c d e f")], "doc_id long, text string")
     optimized = str(
-        _minhash_signatures(d)._jdf.queryExecution().optimizedPlan())
+        minhash_signatures(d)._jdf.queryExecution().optimizedPlan())
     assert optimized.count("md5") == 2, optimized
 
 

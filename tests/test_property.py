@@ -571,38 +571,28 @@ def test_dsir_kernel_matches_pure_python(spark, docs):
 
 
 # ---------------------------------------------------------------------------
-# the j12 per-ROW MinHash signature formulation (streaming/queries.py,
-# registered r17 — the stream-safe array_min-over-transform restatement
-# of the i34 slot contract) vs a pure-Python recomputation of the
-# kernel's definition: the property sweeps the short-doc boundary
-# (exactly 3 tokens = one shingle) and repeated-shingle texts
-# (array_distinct load-bearing), complementing the corpus-level
-# slot-equality pin in tests/test_r17_queries.py.
+# the MinHash signature kernel (operators/llm_text.py minhash_signatures,
+# shared by i34, i68 and j12) vs a pure-Python recomputation of the slot
+# contract: the property sweeps the short-doc boundary (exactly 3 tokens =
+# one shingle) and repeated-shingle texts (array_distinct load-bearing),
+# complementing the corpus-level slot-equality pin in
+# tests/test_r17_queries.py.
 
 
 @given(texts=st.lists(
     st.lists(st.sampled_from(["x", "y", "zz", "w"]), min_size=3, max_size=9),
     min_size=1, max_size=6))
 @settings(max_examples=10, deadline=None, derandomize=True)
-def test_row_signature_matches_slot_contract(spark, texts):
+def test_minhash_signature_matches_slot_contract(spark, texts):
     import hashlib
 
-    from pyspark.sql import functions as F
-
-    from csv_to_parquet_aws_datalake_spark.functions.text import (
-        ngrams,
-        tokens,
-    )
-    from csv_to_parquet_aws_datalake_spark.streaming.queries import (
-        _row_sig_cols,
+    from csv_to_parquet_aws_datalake_spark.operators.llm_text import (
+        minhash_signatures,
     )
 
     rows = [(i, " ".join(toks)) for i, toks in enumerate(texts)]
-    df = (spark.createDataFrame(rows, "doc_id long, text string")
-          .withColumn("t", tokens())
-          .filter(F.size("t") >= 3)
-          .withColumn("shd", F.array_distinct(ngrams("t", 3)))
-          .selectExpr("doc_id", *_row_sig_cols()))
+    df = minhash_signatures(
+        spark.createDataFrame(rows, "doc_id long, text string"))
     got = {r["doc_id"]: tuple(r[f"s{k}"] for k in range(8))
            for r in df.collect()}
 

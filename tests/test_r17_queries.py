@@ -15,25 +15,23 @@ from csv_to_parquet_aws_datalake_spark import registry
 registry.load_all()
 
 
-def test_j12_row_signatures_match_kernel(spark, sf_dir):
-    # the per-ROW signature formulation (array_min over transform — the
-    # stream-safe form) must equal the registered i34 kernel's
-    # shingle-explode + groupBy-min formulation slot for slot: same
-    # distinct shingle set, same md5 slot substrings, same (string) min
+def test_minhash_signatures_match_grouped_min(spark, sf_dir):
+    # the signature kernel's per-row array form (array_min over transform,
+    # the form i34, i68 and j12 run) must equal the textbook
+    # explode + groupBy-min formulation slot for slot: same distinct
+    # shingle set, same md5 slot substrings, same (string) min
     from csv_to_parquet_aws_datalake_spark.functions.text import (
         ngrams,
         tokens,
     )
-    from csv_to_parquet_aws_datalake_spark.streaming.queries import (
-        _row_sig_cols,
+    from csv_to_parquet_aws_datalake_spark.operators.llm_text import (
+        minhash_signatures,
     )
 
     d = (spark.read.parquet(f"{sf_dir}/documents.parquet")
          .filter(F.col("text").isNotNull()))
+    sig = minhash_signatures(d)
     toks = d.withColumn("t", tokens()).filter(F.size("t") >= 3)
-    row_sig = (toks.withColumn("shd", F.array_distinct(ngrams("t", 3)))
-               .selectExpr("doc_id", *_row_sig_cols()))
-
     sh = toks.select(
         "doc_id",
         F.explode(F.array_distinct(ngrams("t", 3))).alias("sh"))
@@ -46,7 +44,7 @@ def test_j12_row_signatures_match_kernel(spark, sf_dir):
         for k in range(8)])
 
     got = {r["doc_id"]: tuple(r[f"s{k}"] for k in range(8))
-           for r in row_sig.collect()}
+           for r in sig.collect()}
     want = {r["doc_id"]: tuple(r[f"s{k}"] for k in range(8))
             for r in kern_sig.collect()}
     assert got == want and got
@@ -83,9 +81,9 @@ def test_j12_batch_twin_plan_shape(spark, sf_dir):
     # (registry.STREAMING — building their "plan" costs a full drain and
     # budgets a vacuous table scan), so j12's shuffle shape is gated
     # here on its BATCH TWIN: the identical band pipeline — same
-    # j12_bands_frame kernel, same re-keyed src19 batch side — built
-    # directly over the documents table in batch (no drain, no fixture
-    # write: this test costs one plan build — review r17).  The
+    # minhash_signatures + band_keys kernels, same re-keyed src19 batch
+    # side — built directly over the documents table in batch (no drain,
+    # no fixture write: this test costs one plan build — review r17).  The
     # contract at 100 TB: candidates come from a (b, bk) EQUI-join
     # (never all-pairs — no CartesianProduct, no non-equi join),
     # signatures are map-side expressions (no per-doc aggregation
@@ -93,18 +91,20 @@ def test_j12_batch_twin_plan_shape(spark, sf_dir):
     # exchanges (band join sides + the pair-count aggregation; a
     # broadcast of the small side may remove some at this SF).
     from csv_to_parquet_aws_datalake_spark.loader import load_table
-    from csv_to_parquet_aws_datalake_spark.plans.checks import physical_plan
-    from csv_to_parquet_aws_datalake_spark.streaming.queries import (
-        _J12_REKEY,
-        j12_bands_frame,
+    from csv_to_parquet_aws_datalake_spark.operators.llm_text import (
+        band_keys,
+        minhash_signatures,
     )
+    from csv_to_parquet_aws_datalake_spark.plans.checks import physical_plan
+    from csv_to_parquet_aws_datalake_spark.streaming.queries import _J12_REKEY
 
     d = (load_table(spark, sf_dir, "documents")
          .filter(F.col("text").isNotNull()))
-    corpus = j12_bands_frame(d).withColumnRenamed("doc_id", "corpus_doc")
+    corpus = (band_keys(minhash_signatures(d))
+              .withColumnRenamed("doc_id", "corpus_doc"))
     batch = (d.filter(F.col("source") == "src19")
              .select((F.col("doc_id") + _J12_REKEY).alias("doc_id"), "text"))
-    twin = (j12_bands_frame(batch)
+    twin = (band_keys(minhash_signatures(batch))
             .withColumnRenamed("doc_id", "batch_doc")
             .join(corpus, ["b", "bk"])
             .groupBy("batch_doc", "corpus_doc")

@@ -60,17 +60,16 @@ def test_events_nanos_normalization(spark, sf_dir):
     assert row.ts.year == 2024
 
 
-def test_loader_normalizes_ntz_when_host_locks_conf(spark, sf_dir, monkeypatch):
+@pytest.fixture
+def ntz_locked_events(spark, sf_dir, monkeypatch):
     # the round-4 landmine (SURVEY §1.3): untagged timestamp[us] parquet
     # reads as TIMESTAMP_NTZ when inferTimestampNTZ is on.  configure()
     # turns it off, but a host session may lock confs — the loader's NTZ
     # cast fallback must still deliver TimestampType, value-preserving
     # under the UTC session zone.  The lock is simulated for real: the
-    # conf stays 'true' and configure() is a no-op for the whole
-    # load_table call, so the column READS as NTZ and the fallback branch
-    # is the only thing standing between us and a schema mismatch.
-    import pytest
-
+    # conf stays 'true' and the loader's configure() is a no-op, so the
+    # column READS as NTZ and the fallback branch is the only thing
+    # standing between us and a schema mismatch.  Yields the raw read.
     from csv_to_parquet_aws_datalake_spark import loader
 
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
@@ -78,14 +77,34 @@ def test_loader_normalizes_ntz_when_host_locks_conf(spark, sf_dir, monkeypatch):
         raw = spark.read.parquet(f"{sf_dir}/events.parquet")
         if dict(raw.dtypes).get("ts") != "timestamp_ntz":
             pytest.skip("testdata is not in the untagged-us layout this round")
-        baseline = raw.selectExpr("cast(ts as timestamp) AS ts") \
-            .orderBy("ts").first().ts
         monkeypatch.setattr(loader, "configure", lambda s: s)
-        ev = loader.load_table(spark, sf_dir, "events")
-        assert dict(ev.dtypes)["ts"] == "timestamp"
-        assert ev.orderBy("ts").first().ts == baseline
+        yield raw
     finally:
         spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+
+
+def test_loader_normalizes_ntz_when_host_locks_conf(spark, sf_dir,
+                                                    ntz_locked_events):
+    from csv_to_parquet_aws_datalake_spark import loader
+
+    baseline = ntz_locked_events.selectExpr("cast(ts as timestamp) AS ts") \
+        .orderBy("ts").first().ts
+    ev = loader.load_table(spark, sf_dir, "events")
+    assert dict(ev.dtypes)["ts"] == "timestamp"
+    assert ev.orderBy("ts").first().ts == baseline
+
+
+def test_events_stream_normalizes_ntz_when_host_locks_conf(
+        spark, sf_dir, ntz_locked_events, monkeypatch):
+    # the j-family's events stream takes its schema from the file footer,
+    # so under the locked conf it reads NTZ too; it must come out of the
+    # loader's normalization as the batch table does
+    from csv_to_parquet_aws_datalake_spark.streaming import queries
+
+    monkeypatch.setattr(queries, "configure", lambda s: s)
+    ev = queries._events_stream(spark, sf_dir)
+    assert ev.isStreaming
+    assert dict(ev.dtypes)["ts"] == "timestamp"
 
 
 def test_division_by_zero_semantics(spark):
@@ -1647,7 +1666,12 @@ def _balanced(depth: int) -> str:
     # text keeps one fixed name
     (r"F\.(?:transform|aggregate|filter|transform_values|map_filter"
      rf"|zip_with)\((?:[^()]|{_balanced(4)})*?\blambda\b", None),
-], ids=["tokenizer", "width", "hof-lambda"])
+    # operators/llm_text.py alone owns the MinHash slot hash
+    # md5('<k//4>|' || shingle), Spark side and oracle side; a second copy
+    # elsewhere would fork the signature contract
+    (r"md5\(concat\('[\d{][^']*\||md5\('\d\|' \|\|",
+     "operators/llm_text.py"),
+], ids=["tokenizer", "width", "hof-lambda", "minhash"])
 def test_idiom_has_one_owner(pattern, owner):
     import re
 
